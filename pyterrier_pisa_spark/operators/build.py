@@ -238,8 +238,10 @@ def build_lexicon(tf: DataFrame, num_partitions: int | None = None,
         if len(pdf) <= cap:
             pdf = pdf.sort_values("term", ignore_index=True)
             pdf["term_id"] = np.arange(len(pdf), dtype=np.int64)
-            return tf.sparkSession.createDataFrame(
-                pdf, schema="term string, df long, cf long, term_id long"
+            from .retrieve import local_relation
+
+            return local_relation(
+                tf.sparkSession, pdf, "term string, df long, cf long, term_id long"
             ).coalesce(1)
         # identifier-heavy corpus above the cap: persist the full agg so the
         # range partitioner's sampling job doesn't re-execute the tf scan

@@ -14,10 +14,17 @@ Plan shape (one broadcast, one agg shuffle, one window shuffle):
   -> per-posting partial score (whole-stage codegen'd Column math)
   -> groupBy(qid, docid).sum(score)    [partial agg, map-side combine]
   -> window top-k per qid              [WindowGroupLimit pushes k down]
+
+Driver-built relations (query terms, query strings, tag and id maps) go
+through ``local_relation``: an Arrow table that Spark plans as a
+``LocalRelation``. A Python list handed to ``createDataFrame`` would
+instead be re-pickled through an RDD, so every broadcast of such a
+relation ran a job of Python-worker tasks on every retrieve call.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +33,8 @@ from ..functions.tokenizer import tokenize_queries
 from . import score as S
 
 DEFAULT_NUM_RESULTS = 1000  # reference default k (``__init__.py:223,434``)
+QTERMS_SCHEMA = "qid string, term string, qweight double"
+QUERIES_SCHEMA = "qid string, query string"
 
 
 def shuffle_parts(spark: SparkSession) -> int:
@@ -38,6 +47,32 @@ def shuffle_parts(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def local_relation(spark: SparkSession, data, schema: str) -> DataFrame:
+    """Rows (a list of tuples) or a pandas frame as a DataFrame of the DDL
+    ``schema``, built through an Arrow table: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans it as a
+    ``LocalRelation``, so broadcasting or scanning it never starts a Python
+    worker (a Python list goes through ``RDD.map`` instead, and the pandas
+    path is Arrow only when the session enables
+    ``spark.sql.execution.arrow.pyspark.enabled``). The one place the
+    package calls ``createDataFrame``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data[struct.names], schema=arrow_schema,
+                                     preserve_index=False)
+    else:
+        cols = list(zip(*data)) if data else [()] * len(struct.names)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def query_term_rows(
@@ -72,7 +107,7 @@ def query_terms_df(
 ) -> DataFrame:
     """``query_term_rows`` as a (qid, term, qweight) DataFrame to broadcast."""
     rows = query_term_rows(queries, stemmer=stemmer, stopwords=stopwords)
-    return spark.createDataFrame(rows or [], schema="qid string, term string, qweight double")
+    return local_relation(spark, rows, QTERMS_SCHEMA)
 
 
 def query_toks_rows(queries_toks: list[tuple[str, dict]],
@@ -94,7 +129,7 @@ def query_toks_df(spark: SparkSession, queries_toks: list[tuple[str, dict]],
                   toks_scale: float = 100.0) -> DataFrame:
     """``query_toks_rows`` as a (qid, term, qweight) DataFrame to broadcast."""
     rows = query_toks_rows(queries_toks, toks_scale=toks_scale)
-    return spark.createDataFrame(rows or [], schema="qid string, term string, qweight double")
+    return local_relation(spark, rows, QTERMS_SCHEMA)
 
 
 def attach_scores(

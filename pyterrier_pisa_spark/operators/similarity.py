@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .retrieve import local_relation
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
@@ -355,8 +357,8 @@ def ivf_search(
         for cl in order:
             probe_rows.append((r["qid"], [float(x) for x in qv], int(cl)))
     if not probe_rows:
-        return spark.createDataFrame([], schema="qid string, vec_id long, cos double, rank int")
-    q = spark.createDataFrame(probe_rows, schema="qid string, qv array<double>, cluster int")
+        return local_relation(spark, [], "qid string, vec_id long, cos double, rank int")
+    q = local_relation(spark, probe_rows, "qid string, qv array<double>, cluster int")
     j = assigned.join(F.broadcast(q), "cluster")
     cos = _dot(F.col("v"), F.col("qv"))  # unit vectors: cosine == dot
     scored = j.select("qid", "vec_id", cos.alias("cos"))

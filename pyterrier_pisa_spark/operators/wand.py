@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 from ..functions.stopwords import DEFAULT_STOPWORDS
 from . import score as S
 from .codec import get_codec
-from .retrieve import DEFAULT_NUM_RESULTS, query_terms_df
+from .retrieve import (DEFAULT_NUM_RESULTS, QTERMS_SCHEMA, QUERIES_SCHEMA,
+                       local_relation)
 
 
 def _decode_rows(rows_pdf, codec) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -426,8 +427,7 @@ def _query_plan_inputs(index, queries, k1, b, mu, c, scorer, stopwords,
             for (qid, _t, qw), p in zip(rows, pos) if p >= 0
         ]
     else:
-        qterms = spark.createDataFrame(
-            rows or [], schema="qid string, term string, qweight double")
+        qterms = local_relation(spark, rows, QTERMS_SCHEMA)
         stat_col = S.term_stat_col(scorer)
         ts = ensure_term_stats(index, scorer, k1=k1, b=b, mu=mu, c=c)
         lex = index.lexicon.select("term", "term_id", F.col(stat_col).alias("stat")).join(
@@ -500,7 +500,7 @@ def _finalize_blockmax(spark, index, local: DataFrame, queries, k,
     # when the caller compares against a double-precision oracle
     score_col = F.col("score").cast("float").alias("score") if cast_float32 else F.col("score")
     if include_query:
-        qdf = spark.createDataFrame(queries, schema="qid string, query string")
+        qdf = local_relation(spark, queries, QUERIES_SCHEMA)
         out = out.join(F.broadcast(qdf), "qid")
         return out.select("qid", "query", "docid", "docno", score_col, "rank")
     return out.select("qid", "docid", "docno", score_col, "rank")
@@ -513,8 +513,17 @@ def _empty_result(spark, include_query: bool = True,
     against non-empty results downstream."""
     q = "query string, " if include_query else ""
     s = "float" if cast_float32 else "double"
-    return spark.createDataFrame(
-        [], schema=f"qid string, {q}docid long, docno string, score {s}, rank int")
+    return local_relation(
+        spark, [], f"qid string, {q}docid long, docno string, score {s}, rank int")
+
+
+def _single_chunk(index, chunk_span: int) -> bool:
+    """True when every docid lies in chunk 0, proven by the ``max_docid``
+    the build stamps into meta. A count proves nothing: streamed indexes
+    keep hashed docids far above ``num_docs``. Indexes without the stamp
+    take the window merge."""
+    mx = index.meta.get("max_docid")
+    return mx is not None and int(mx) < int(chunk_span)
 
 
 def _with_task_group(index, tids) -> tuple[DataFrame, int]:
@@ -568,7 +577,9 @@ def retrieve_blockmax(
             tid_qids.append((tid, qid))
     if not tid_qids:
         return _empty_result(spark, include_query, cast_float32)
-    tq = spark.createDataFrame(tid_qids, schema="term_id long, qid string")
+    # term -> qid tags: a driver-built Arrow LocalRelation (see
+    # ``retrieve.local_relation``), broadcast without a Python worker
+    tq = local_relation(spark, tid_qids, "term_id long, qid string")
 
     tids = sorted({tid for tid, _ in tid_qids})
     cand, _span = _with_task_group(index, tids)
@@ -592,9 +603,9 @@ def retrieve_blockmax(
     # single-chunk index => a query's candidates all share task_group 0: the
     # kernel's local top-k (already ranked under the engine-wide order) IS
     # the global answer — skip the window merge exchange (guide §2.4)
-    single_chunk = int(index.stats["num_docs"]) <= int(_span)
     return _finalize_blockmax(spark, index, local, queries, k, include_query,
-                              cast_float32, local_is_global=single_chunk)
+                              cast_float32,
+                              local_is_global=_single_chunk(index, _span))
 
 
 def retrieve_blockmax_batch(
@@ -650,7 +661,7 @@ def retrieve_blockmax_batch(
     # single-chunk index: every query is scored by exactly one task, so the
     # kernel's local top-k IS the global answer — it emits ranks directly and
     # the window merge exchange is skipped below (guide §2.4)
-    single_chunk = n_chunks == 1
+    single_chunk = _single_chunk(index, chunk_span)
     kernel = make_batch_kernel(qinfo, partial, codec, k, chunk_span,
                                conjunctive=conjunctive, n_qgroups=n_qgroups,
                                emit_rank=single_chunk)
@@ -663,11 +674,12 @@ def retrieve_blockmax_batch(
         # replicate each candidate block ONLY to the query groups whose
         # queries use its term (tiny broadcast tag join — not a full explode):
         # shuffle bytes and per-task decode work stay proportional to what
-        # each task's query subset actually needs
+        # each task's query subset actually needs. The tags, like the qidx
+        # map and the query strings below, are an Arrow LocalRelation
         tag_rows = sorted({(int(t[0]), qi % n_qgroups)
                            for qi, qid in enumerate(qinfo)
                            for t in qinfo[qid]})
-        tags = spark.createDataFrame(tag_rows, schema="term_id long, qgrp int")
+        tags = local_relation(spark, tag_rows, "term_id long, qgrp int")
         cand = cand.join(F.broadcast(tags), "term_id")
         group_keys = ["task_group", "qgrp"]
     else:
@@ -688,8 +700,7 @@ def retrieve_blockmax_batch(
     else:
         top = _topk_plan(local.withColumnRenamed("qidx", "qid"), k) \
             .withColumnRenamed("qid", "qidx")
-    qmap = spark.createDataFrame(
-        [(qi, qid) for qi, qid in enumerate(qinfo)], schema="qidx int, qid string")
+    qmap = local_relation(spark, list(enumerate(qinfo)), "qidx int, qid string")
     top = top.join(F.broadcast(qmap), "qidx").drop("qidx")
     # size-conditional decode join side (see _finalize_blockmax)
     from ..operators.retrieve import decode_docnos
@@ -697,7 +708,7 @@ def retrieve_blockmax_batch(
     out = decode_docnos(top, index.docmap, index.stats.get("num_docs"))
     score_col = F.col("score").cast("float").alias("score") if cast_float32 else F.col("score")
     if include_query:
-        qdf = spark.createDataFrame(queries, schema="qid string, query string")
+        qdf = local_relation(spark, queries, QUERIES_SCHEMA)
         out = out.join(F.broadcast(qdf), "qid")
         return out.select("qid", "query", "docid", "docno", score_col, "rank")
     return out.select("qid", "docid", "docno", score_col, "rank")

@@ -110,10 +110,11 @@ def q_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir)
-    return spark.createDataFrame(
+    return R.local_relation(
+        spark,
         [(idx.stats["num_docs"], idx.num_terms(), idx.stats["total_doclen"],
           round(idx.stats["avg_doclen"], 6))],
-        schema="num_docs long, num_terms long, total_doclen long, avg_doclen double",
+        "num_docs long, num_terms long, total_doclen long, avg_doclen double",
     )
 
 
@@ -292,9 +293,7 @@ def q_bm25_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _persisted(spark, sf_dir)
     ls = LocalSearcher(idx, stopwords="none")
     pdf = ls.search(QUERIES, k=TOPK_K, cast_float32=False)
-    res = spark.createDataFrame(
-        pdf[["qid", "docid", "score", "rank"]],
-        schema="qid string, docid long, score double, rank int")
+    res = R.local_relation(spark, pdf, "qid string, docid long, score double, rank int")
     return res.select("qid", F.col("docid").alias("doc_id"),
                       F.round(F.col("score"), 4).alias("score"),
                       F.col("rank").cast("int").alias("rank"))
@@ -352,9 +351,7 @@ def q_bm25_impact_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     ls = LocalSearcher(_QUANTIZED[sf_dir], scorer="quantized", stopwords="none")
     assert ls._acc_i is not None, "int32 fast path should be armed"
     pdf = ls.search(QUERIES, k=TOPK_K, cast_float32=False)
-    res = spark.createDataFrame(
-        pdf[["qid", "docid", "score", "rank"]],
-        schema="qid string, docid long, score double, rank int")
+    res = R.local_relation(spark, pdf, "qid string, docid long, score double, rank int")
     return res.select("qid", F.col("docid").alias("doc_id"),
                       F.col("score").cast("long").alias("score"),
                       F.col("rank").cast("int").alias("rank"))

@@ -10,6 +10,7 @@ back into this same class.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,8 @@ class LogicalIndex:
     - stats:    {num_docs, total_doclen, avg_doclen}
     - blocks:   optional packed block table (see index_store) for the
                 block-max WAND kernel
+    - tf_for_terms: optional terms -> ``tf`` restricted to those terms;
+                a persisted index decodes only those terms' blocks
     """
 
     lexicon: DataFrame
@@ -42,6 +45,13 @@ class LogicalIndex:
     stats: dict
     blocks: DataFrame | None = None
     meta: dict = field(default_factory=dict)
+    tf_for_terms: Callable[[list[str]], DataFrame] | None = None
+
+    def query_tf(self, rows: list[tuple[str, str, float]]) -> DataFrame:
+        """The flat postings a set of (qid, term, qweight) rows can touch."""
+        if self.tf_for_terms is None:
+            return self.tf
+        return self.tf_for_terms(sorted({t for _q, t, _w in rows}))
 
     def num_docs(self) -> int:
         return self.stats["num_docs"]
@@ -115,8 +125,7 @@ def prepare_corpus(
 
         pdf = pdf.sort_values("docno", ignore_index=True)
         pdf["docid"] = np.arange(len(pdf), dtype=np.int64)
-        ids = F.broadcast(
-            spark.createDataFrame(pdf, schema="docno string, docid long"))
+        ids = F.broadcast(R.local_relation(spark, pdf, "docno string, docid long"))
         return corpus.join(ids, "docno")
     ids = B.assign_dense_ids(corpus.select("docno"), ["docno"], "docid",
                              num_partitions).select("docno", "docid")
@@ -172,9 +181,10 @@ def retrieve(
     """Exhaustive retrieval plan (reference ``ranked_or``/``ranked_and``) —
     returns (qid[, query], docid, docno, score, rank)."""
     spark = index.tf.sparkSession
-    qterms = R.query_terms_df(spark, queries, stemmer=index.meta.get("stemmer", "porter2"),
-                              stopwords=stopwords)
-    scored = R.attach_scores(qterms, index.tf, index.lexicon, index.stats,
+    rows = R.query_term_rows(queries, stemmer=index.meta.get("stemmer", "porter2"),
+                             stopwords=stopwords)
+    qterms = R.local_relation(spark, rows, R.QTERMS_SCHEMA)
+    scored = R.attach_scores(qterms, index.query_tf(rows), index.lexicon, index.stats,
                              scorer=scorer, **scorer_params)
     if mode == "ranked_or":
         agg = R.ranked_or(scored)
@@ -186,7 +196,7 @@ def retrieve(
     else:
         raise ValueError(f"unknown mode {mode!r}")
     top = R.topk(agg, k)
-    qdf = spark.createDataFrame(queries, schema="qid string, query string") if include_query else None
+    qdf = R.local_relation(spark, queries, R.QUERIES_SCHEMA) if include_query else None
     return R.finalize(top, index.docmap, qdf, num_docs=index.stats.get("num_docs"))
 
 
@@ -231,8 +241,9 @@ def retrieve_toks(
     quantized scorer is the integer dot product whose exact arithmetic is
     pinned by reference ``tests/test_dict.py:49-79``."""
     spark = index.tf.sparkSession
-    qterms = R.query_toks_df(spark, queries_toks, toks_scale=toks_scale)
-    scored = R.attach_scores(qterms, index.tf, index.lexicon, index.stats,
+    rows = R.query_toks_rows(queries_toks, toks_scale=toks_scale)
+    qterms = R.local_relation(spark, rows, R.QTERMS_SCHEMA)
+    scored = R.attach_scores(qterms, index.query_tf(rows), index.lexicon, index.stats,
                              scorer=scorer, **scorer_params)
     top = R.topk(R.ranked_or(scored), k)
     return R.finalize(top, index.docmap, None, num_docs=index.stats.get("num_docs"))

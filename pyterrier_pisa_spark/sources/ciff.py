@@ -292,8 +292,7 @@ def import_ciff(spark: SparkSession, ciff_path: str, index_path: str,
     is indistinguishable from a built one."""
     import shutil
 
-    import pandas as pd
-
+    from ..operators.retrieve import local_relation
     from .index_store import _commit_phase, build_index
 
     os.makedirs(index_path, exist_ok=True)
@@ -306,11 +305,9 @@ def import_ciff(spark: SparkSession, ciff_path: str, index_path: str,
     DOC_SCHEMA = "docid long, docno string, doclen long, content_sha256 string"
 
     def _flush(rows, schema, out_dir, mode):
-        pdf = pd.DataFrame(rows)
-        spark.createDataFrame(pdf if len(rows) else [], schema=schema).write.mode(
-            mode).parquet(out_dir)
+        local_relation(spark, rows, schema).write.mode(mode).parquet(out_dir)
 
-    n_lists, n_tf, n_docs = 0, 0, 0
+    n_lists, n_tf, n_docs, max_docid = 0, 0, 0, None
     tf_mode, doc_mode = "overwrite", "overwrite"
     tf_rows: list[tuple] = []
     doc_rows: list[tuple] = []
@@ -340,6 +337,7 @@ def import_ciff(spark: SparkSession, ciff_path: str, index_path: str,
             docid, docno, dl = decode_doc_record(buf)
             doc_rows.append((docid, docno, dl, None))
             n_docs += 1
+            max_docid = docid if max_docid is None else max(max_docid, docid)
             if len(doc_rows) >= batch_rows:
                 _flush(doc_rows, DOC_SCHEMA, docmap_dir, doc_mode)
                 doc_rows, doc_mode = [], "append"
@@ -357,8 +355,9 @@ def import_ciff(spark: SparkSession, ciff_path: str, index_path: str,
     shutil.rmtree(tf_raw_dir, ignore_errors=True)
 
     _commit_phase(index_path, "tf", {
-        "num_docs": int(header.num_docs), "tf_rows": n_tf, "imported_ciff": ciff_path,
+        "num_docs": int(header.num_docs), "tf_rows": n_tf, "max_docid": max_docid,
+        "imported_ciff": ciff_path,
     })
-    empty = spark.createDataFrame([], schema="docno string, content string")
+    empty = local_relation(spark, [], "docno string, content string")
     meta = build_index(empty, index_path, mode="resume", **build_kwargs)
     return meta

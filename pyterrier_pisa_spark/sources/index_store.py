@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -53,6 +54,7 @@ from ..functions import porter2 as _p2
 from ..operators import build as B
 from ..operators import score as S
 from ..operators.codec import delta_encode_segments, get_codec
+from ..operators.retrieve import local_relation
 from ..plans.pipeline import LogicalIndex, prepare_corpus
 
 FORMAT_VERSION = 1
@@ -140,8 +142,6 @@ def build_index(
         if mode == "create":
             raise FileExistsError(f"index already exists at {path} (mode='create')")
         if mode == "overwrite":
-            import shutil
-
             shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
 
@@ -239,7 +239,7 @@ def build_index(
         _append_metrics(spark, path, "tf", [("tf", -1, ndocs, nposts, 0, time.time())])
         _tf_payload = {"num_docs": ndocs, "tf_rows": nposts,
                        "total_doclen": int(agg["total_dl"] or 0),
-                       "sec": time.time() - t0}
+                       "max_docid": agg["mx"], "sec": time.time() - t0}
 
     if os.path.exists(os.path.join(path, "fwd")):
         fwd = spark.read.parquet(os.path.join(path, "fwd"))
@@ -308,8 +308,6 @@ def build_index(
             pdf = agg.limit(B.SMALL_VOCAB_MAX + 1).toPandas()
         ldir = os.path.join(path, "lexicon")
         if len(pdf) <= B.SMALL_VOCAB_MAX:
-            import shutil
-
             import pyarrow as pa
             import pyarrow.parquet as papq
 
@@ -435,11 +433,18 @@ def build_index(
         "encoding": encoding,
         "scorer": {"name": "bm25", "k1": k1, "b": b},
         "stats": stats,
+        # largest docid, from the phase-1 write's Observation (or the
+        # streamed/CIFF ingest's own stats): the single-chunk query fast
+        # paths switch on only when it proves every docid lies in chunk 0
+        "max_docid": json.load(open(_marker(path, "tf"))).get("max_docid"),
         "built_sec": time.time() - t0,
     }
     with open(os.path.join(path, "meta.json"), "w") as fh:
         json.dump(meta, fh, indent=1)
     B.release_caches()
+    # a plan cached over an earlier index at this path (load_index persists
+    # the lexicon) would otherwise keep serving the old tables
+    spark.catalog.refreshByPath(path)
     return meta
 
 
@@ -626,8 +631,7 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
     # broadcast of it skips the parquet read-back job; otherwise read the
     # lexicon table and let the planner pick the join strategy
     if lex_pdf is not None:
-        lex_map = F.broadcast(spark.createDataFrame(
-            lex_pdf[["term", "term_id"]], schema="term string, term_id long"))
+        lex_map = F.broadcast(local_relation(spark, lex_pdf, "term string, term_id long"))
     else:
         lex_map = lexicon.select("term", "term_id")
     tf2 = tf.join(lex_map, "term").select(
@@ -796,6 +800,8 @@ def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
         ts_pdf = blk.groupby("term_id", as_index=False)["block_max_score"].max() \
             .rename(columns={"block_max_score": "max_score"})
         tdir = os.path.join(dst_path, "term_stats")
+        # parts of an earlier quantize into this dir would be read as well
+        shutil.rmtree(tdir, ignore_errors=True)
         os.makedirs(tdir, exist_ok=True)
         papq.write_table(pa.Table.from_pandas(ts_pdf, preserve_index=False),
                          os.path.join(tdir, "part-00000.parquet"))
@@ -818,6 +824,7 @@ def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
                                   "mu": mu, "c": c, "global_max": gmax}
     with open(os.path.join(dst_path, "meta.json"), "w") as fh:
         json.dump(new_meta, fh, indent=1)
+    spark.catalog.refreshByPath(dst_path)
     return new_meta
 
 
@@ -906,6 +913,32 @@ def _read_parquet_pandas(path: str, columns: list[str] | None = None):
     return pads.dataset(path).to_table(columns=columns).to_pandas()
 
 
+def _driver_lexicon(index: "PersistedIndex"):
+    """The (term, term_id, df, cf) lexicon as a pandas frame, read once per
+    index with pyarrow and cached; None above ``DRIVER_TERM_TABLE_MAX``."""
+    nt = (index.stats or {}).get("num_terms")
+    if nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
+        return None
+    cache = index._driver_cache
+    if "_lexicon" not in cache:
+        lp = _table_path(index.path, index.meta, "lexicon")
+        cache["_lexicon"] = _read_parquet_pandas(lp, ["term", "term_id", "df", "cf"])
+    return cache["_lexicon"]
+
+
+def driver_term_ids(index: "PersistedIndex", terms: list[str]) -> list[int] | None:
+    """term_ids of the in-vocabulary ``terms`` from the cached driver-side
+    lexicon (no scorer stats are read or computed); None above the gate."""
+    lex = _driver_lexicon(index)
+    if lex is None:
+        return None
+    cache = index._driver_cache
+    if "_term_index" not in cache:
+        cache["_term_index"] = pd.Index(lex["term"])
+    pos = cache["_term_index"].get_indexer(pd.Index(terms, dtype=object))
+    return lex["term_id"].to_numpy()[pos[pos >= 0]].tolist()
+
+
 def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
                       b: float, mu: float, c: float):
     """(term -> term_id, stat, max_score, min_score) resolved DRIVER-SIDE for
@@ -915,21 +948,14 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     numpy arrays {'index': pd.Index(term), 'term_id', 'stat', 'ms', 'mn'} or
     None above ``DRIVER_TERM_TABLE_MAX`` (callers fall back to the Spark
     broadcast-join path — same values, one job)."""
-    import pandas as _pd
-
     meta = index.meta
-    nt = (index.stats or {}).get("num_terms")
-    if nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
+    lex_pdf = _driver_lexicon(index)
+    if lex_pdf is None:
         return None
     key = (scorer, float(k1), float(b), float(mu), float(c))
     cache = index._driver_cache
     if key in cache:
         return cache[key]
-    lex_pdf = cache.get("_lexicon")
-    if lex_pdf is None:
-        lp = _table_path(index.path, meta, "lexicon")
-        lex_pdf = _read_parquet_pandas(lp, ["term", "term_id", "df", "cf"])
-        cache["_lexicon"] = lex_pdf
     built = meta["scorer"].get("name", "bm25")
     fast = (scorer == "bm25" and built == "bm25"
             and k1 == meta["scorer"].get("k1") and b == meta["scorer"].get("b")) \
@@ -956,7 +982,7 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     m = lex_pdf.merge(ts_pdf, on="term_id", how="left")
     stat_col = S.term_stat_col(scorer)
     tbl = {
-        "index": _pd.Index(m["term"]),
+        "index": pd.Index(m["term"]),
         "term_id": m["term_id"].to_numpy(np.int64),
         "stat": m[stat_col].to_numpy(np.float64),
         "ms": m["max_score"].fillna(0.0).to_numpy(np.float64),
@@ -984,9 +1010,10 @@ class PersistedIndex:
     # (e.g. docid-range shards with filtered blocks) must set this False.
     pristine: bool = False
 
-    def flat_tf(self) -> DataFrame:
-        """Decode blocks back to (term_id, docid, tf, doclen) — the oracle
-        view (also backs the reference's ``get_corpus_iter``, S5)."""
+    def flat_tf(self, blocks: DataFrame | None = None) -> DataFrame:
+        """Decode blocks (all of them by default) back to (term_id, docid,
+        tf, doclen) — the oracle view (also backs the reference's
+        ``get_corpus_iter``, S5)."""
         codec = get_codec(self.meta.get("encoding"))
 
         from ..operators.codec import delta_decode_segments
@@ -1007,7 +1034,8 @@ class PersistedIndex:
                 tid = np.repeat(pdf["term_id"].to_numpy(np.int64), counts)
                 yield pd.DataFrame({"term_id": tid, "docid": d, "tf": t, "doclen": dl})
 
-        return self.blocks.select("term_id", "count", "docids_delta", "tfs", "doclens").mapInPandas(
+        blocks = self.blocks if blocks is None else blocks
+        return blocks.select("term_id", "count", "docids_delta", "tfs", "doclens").mapInPandas(
             _decode, schema="term_id long, docid long, tf long, doclen long"
         )
 
@@ -1021,12 +1049,30 @@ class PersistedIndex:
     def __len__(self) -> int:
         return self.num_docs()
 
-    def as_logical(self) -> LogicalIndex:
-        tf = self.flat_tf().join(self.lexicon.select("term_id", "term"), "term_id").select(
+    def _term_tf(self, blocks: DataFrame) -> DataFrame:
+        return self.flat_tf(blocks).join(self.lexicon.select("term_id", "term"), "term_id").select(
             "docid", "term", F.col("tf").cast("int").alias("tf"), "doclen"
         )
-        return LogicalIndex(lexicon=self.lexicon, tf=tf, docmap=self.docmap,
-                            stats=self.stats, blocks=self.blocks, meta=self.meta)
+
+    def tf_for_terms(self, terms: list[str]) -> DataFrame:
+        """Flat postings of ``terms`` only: the blocks are restricted to the
+        terms' ids BELOW the decode, so the exhaustive plan's cost follows
+        the query, not the index. Vocab-sized lexicons resolve the ids on
+        the driver and the ``isin`` reaches the parquet scan (row-group
+        pruning on the term-range-partitioned postings); larger ones take a
+        broadcast left-semi join with (terms ⋈ lexicon)."""
+        ids = driver_term_ids(self, terms)
+        if ids is not None:
+            return self._term_tf(self.blocks.filter(F.col("term_id").isin(ids)))
+        want = F.broadcast(local_relation(
+            self.blocks.sparkSession, [(t,) for t in terms], "term string"))
+        want = want.join(self.lexicon.select("term", "term_id"), "term").select("term_id")
+        return self._term_tf(self.blocks.join(F.broadcast(want), "term_id", "left_semi"))
+
+    def as_logical(self) -> LogicalIndex:
+        return LogicalIndex(lexicon=self.lexicon, tf=self._term_tf(self.blocks),
+                            docmap=self.docmap, stats=self.stats, blocks=self.blocks,
+                            meta=self.meta, tf_for_terms=self.tf_for_terms)
 
 
 def _meta_fingerprint(index_path: str) -> str | None:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import termvec_udf
 from ..operators.dedup import _md5_int
+from ..operators.retrieve import local_relation
 
 
 def stream_docids(df: DataFrame, docno_col: str = "docno") -> DataFrame:
@@ -91,16 +92,20 @@ def compact_stream_index(spark: SparkSession, path: str, **build_kwargs) -> dict
     if not os.path.exists(tf_dir):
         raise FileNotFoundError(f"no streamed tf shards at {tf_dir}")
     row = spark.read.parquet(os.path.join(path, "docmap")).agg(
-        F.count("*").alias("n"), F.sum("doclen").alias("dl")).collect()[0]
+        F.count("*").alias("n"), F.sum("doclen").alias("dl"),
+        F.max("docid").alias("mx")).collect()[0]
     ndocs, total_dl = int(row["n"]), int(row["dl"] or 0)
     nposts = spark.read.parquet(tf_dir).count()
+    # max_docid: hashed ids are not dense, so the build's single-chunk query
+    # fast paths must see the real largest id, not infer it from num_docs
     _commit_phase(path, "tf", {"num_docs": ndocs, "tf_rows": nposts,
-                               "total_doclen": total_dl, "streamed": True})
+                               "total_doclen": total_dl, "max_docid": row["mx"],
+                               "streamed": True})
     for ph in ("lexicon", "postings", "maxscore"):
         m = _marker(path, ph)
         if os.path.exists(m):
             os.remove(m)
-    corpus_unused = spark.createDataFrame([], schema="docno string, content string")
+    corpus_unused = local_relation(spark, [], "docno string, content string")
     return build_index(corpus_unused, path, mode="resume", **build_kwargs)
 
 
