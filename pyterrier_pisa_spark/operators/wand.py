@@ -526,6 +526,16 @@ def _single_chunk(index, chunk_span: int) -> bool:
     return mx is not None and int(mx) < int(chunk_span)
 
 
+def _chunk_count(index, chunk_span: int) -> int:
+    """Docid chunks the index spans, from the same ``max_docid`` stamp (a
+    streamed index's hashed ids spread over many chunks); inferred from the
+    doc count only for indexes without the stamp."""
+    mx = index.meta.get("max_docid")
+    if mx is not None:
+        return int(mx) // int(chunk_span) + 1
+    return max(1, -(-int(index.stats["num_docs"]) // chunk_span))
+
+
 def _with_task_group(index, tids) -> tuple[DataFrame, int]:
     """Candidate blocks for the query terms, tagged with their docid-chunk
     task group. The isin filter reaches the parquet scan (row-group min/max
@@ -654,7 +664,7 @@ def retrieve_blockmax_batch(
     from .retrieve import shuffle_parts
 
     sp_ = shuffle_parts(spark)
-    n_chunks = max(1, -(-int(index.stats["num_docs"]) // chunk_span))
+    n_chunks = _chunk_count(index, chunk_span)
     n_qgroups = 1
     if n_chunks < sp_:
         n_qgroups = max(1, min(len(qinfo), -(-sp_ // n_chunks)))

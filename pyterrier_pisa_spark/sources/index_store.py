@@ -913,32 +913,6 @@ def _read_parquet_pandas(path: str, columns: list[str] | None = None):
     return pads.dataset(path).to_table(columns=columns).to_pandas()
 
 
-def _driver_lexicon(index: "PersistedIndex"):
-    """The (term, term_id, df, cf) lexicon as a pandas frame, read once per
-    index with pyarrow and cached; None above ``DRIVER_TERM_TABLE_MAX``."""
-    nt = (index.stats or {}).get("num_terms")
-    if nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
-        return None
-    cache = index._driver_cache
-    if "_lexicon" not in cache:
-        lp = _table_path(index.path, index.meta, "lexicon")
-        cache["_lexicon"] = _read_parquet_pandas(lp, ["term", "term_id", "df", "cf"])
-    return cache["_lexicon"]
-
-
-def driver_term_ids(index: "PersistedIndex", terms: list[str]) -> list[int] | None:
-    """term_ids of the in-vocabulary ``terms`` from the cached driver-side
-    lexicon (no scorer stats are read or computed); None above the gate."""
-    lex = _driver_lexicon(index)
-    if lex is None:
-        return None
-    cache = index._driver_cache
-    if "_term_index" not in cache:
-        cache["_term_index"] = pd.Index(lex["term"])
-    pos = cache["_term_index"].get_indexer(pd.Index(terms, dtype=object))
-    return lex["term_id"].to_numpy()[pos[pos >= 0]].tolist()
-
-
 def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
                       b: float, mu: float, c: float):
     """(term -> term_id, stat, max_score, min_score) resolved DRIVER-SIDE for
@@ -948,14 +922,21 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     numpy arrays {'index': pd.Index(term), 'term_id', 'stat', 'ms', 'mn'} or
     None above ``DRIVER_TERM_TABLE_MAX`` (callers fall back to the Spark
     broadcast-join path — same values, one job)."""
+    import pandas as _pd
+
     meta = index.meta
-    lex_pdf = _driver_lexicon(index)
-    if lex_pdf is None:
+    nt = (index.stats or {}).get("num_terms")
+    if nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
         return None
     key = (scorer, float(k1), float(b), float(mu), float(c))
     cache = index._driver_cache
     if key in cache:
         return cache[key]
+    lex_pdf = cache.get("_lexicon")
+    if lex_pdf is None:
+        lp = _table_path(index.path, meta, "lexicon")
+        lex_pdf = _read_parquet_pandas(lp, ["term", "term_id", "df", "cf"])
+        cache["_lexicon"] = lex_pdf
     built = meta["scorer"].get("name", "bm25")
     fast = (scorer == "bm25" and built == "bm25"
             and k1 == meta["scorer"].get("k1") and b == meta["scorer"].get("b")) \
@@ -982,7 +963,7 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     m = lex_pdf.merge(ts_pdf, on="term_id", how="left")
     stat_col = S.term_stat_col(scorer)
     tbl = {
-        "index": pd.Index(m["term"]),
+        "index": _pd.Index(m["term"]),
         "term_id": m["term_id"].to_numpy(np.int64),
         "stat": m[stat_col].to_numpy(np.float64),
         "ms": m["max_score"].fillna(0.0).to_numpy(np.float64),
@@ -1055,15 +1036,10 @@ class PersistedIndex:
         )
 
     def tf_for_terms(self, terms: list[str]) -> DataFrame:
-        """Flat postings of ``terms`` only: the blocks are restricted to the
-        terms' ids BELOW the decode, so the exhaustive plan's cost follows
-        the query, not the index. Vocab-sized lexicons resolve the ids on
-        the driver and the ``isin`` reaches the parquet scan (row-group
-        pruning on the term-range-partitioned postings); larger ones take a
-        broadcast left-semi join with (terms ⋈ lexicon)."""
-        ids = driver_term_ids(self, terms)
-        if ids is not None:
-            return self._term_tf(self.blocks.filter(F.col("term_id").isin(ids)))
+        """Flat postings of ``terms`` only: a broadcast left-semi join with
+        (terms ⋈ lexicon) restricts the blocks to the terms' ids BELOW the
+        decode, so the exhaustive plan's cost follows the query, not the
+        index. One plan for every lexicon size; no driver-side read."""
         want = F.broadcast(local_relation(
             self.blocks.sparkSession, [(t,) for t in terms], "term string"))
         want = want.join(self.lexicon.select("term", "term_id"), "term").select("term_id")

@@ -2,7 +2,8 @@
 
 - streamed index (hashed 60-bit docids): the single-chunk fast paths must
   not fire from ``num_docs <= chunk_span``; both kernels return at most k
-  rows per query, equal to the exhaustive plan;
+  rows per query, equal to the exhaustive plan, and the batch kernel adds
+  no query groups (its ids span many chunks);
 - rebuilt in place in one session: the engines must not read the earlier
   index's persisted lexicon;
 - re-quantized into a dir that already holds ``term_stats`` parts: only the
@@ -64,6 +65,11 @@ def test_streamed_index_topk_rows(spark, tmp_path):
         assert got.groupby("qid").size().max() <= k
         pd.testing.assert_frame_equal(got, exh)
     assert set(exh["qid"]) == {"q1", "q2", "q3"}
+    # the same stamp sizes the batch kernel's query groups: hashed ids span
+    # many chunks, so no candidate block is copied to query groups
+    plan = retrieve_blockmax_batch(idx, queries, k=k)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "qgrp" not in plan
 
 
 def test_batch_build_stamps_max_docid(spark, tmp_path):

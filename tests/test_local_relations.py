@@ -6,7 +6,8 @@
   of Python-worker tasks just to broadcast its query terms;
 - ``createDataFrame`` is called in one place only, ``local_relation``;
 - the exhaustive plan over a persisted index decodes only the query terms'
-  blocks, and its results are identical to decoding every block.
+  blocks (a broadcast left-semi join below the decode), and its results are
+  identical to decoding every block.
 """
 
 import inspect
@@ -22,7 +23,6 @@ from pyterrier_pisa_spark.operators.wand import (_empty_result,
                                                  retrieve_blockmax,
                                                  retrieve_blockmax_batch)
 from pyterrier_pisa_spark.plans.pipeline import retrieve, retrieve_toks
-from pyterrier_pisa_spark.sources import index_store
 from pyterrier_pisa_spark.sources.corpus import synth_code_corpus
 from pyterrier_pisa_spark.sources.index_store import (build_index, load_index,
                                                       quantize_index)
@@ -136,30 +136,36 @@ def _same(a: pd.DataFrame, b: pd.DataFrame):
     pd.testing.assert_frame_equal(a, b)
 
 
-def _scan_restricted(df) -> bool:
+def _decode_restricted(df) -> bool:
+    """The decode reads the blocks semi-joined with the query's term ids."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return bool(re.search(r"PushedFilters: \[[^\]]*In\(term_id", plan))
+    return bool(re.search(r"MapInPandas _decode\(.*\n[ :]*\+- BroadcastHashJoin "
+                          r"\[term_id#\d+L\], \[term_id#\d+L\], LeftSemi", plan))
 
 
 @pytest.mark.parametrize("mode", ["ranked_or", "ranked_and"])
 def test_exhaustive_decodes_only_query_blocks(spark, multi_chunk, mode):
     idx, _ = multi_chunk
     logical = idx.as_logical()
+    idx._driver_cache.clear()
     res = retrieve(logical, QUERIES, k=20, mode=mode, include_query=False)
-    assert _scan_restricted(res), res._jdf.queryExecution().executedPlan().toString()
+    assert _decode_restricted(res), res._jdf.queryExecution().executedPlan().toString()
+    _assert_local(res)
     full = retrieve(_full_decode(logical), QUERIES, k=20, mode=mode,
                     include_query=False)
-    assert not _scan_restricted(full)
+    assert not _decode_restricted(full)
     got = res.toPandas()
     assert len(got) > 0
     _same(got, full.toPandas())
+    # the ids come from the Spark lexicon: nothing is read to the driver
+    assert not idx._driver_cache
 
 
 def test_exhaustive_restriction_quantized(spark, multi_chunk):
     _, qidx = multi_chunk
     logical = qidx.as_logical()
     res = retrieve(logical, QUERIES, k=20, scorer="quantized", include_query=False)
-    assert _scan_restricted(res)
+    assert _decode_restricted(res)
     full = retrieve(_full_decode(logical), QUERIES, k=20, scorer="quantized",
                     include_query=False)
     got = res.toPandas()
@@ -169,19 +175,3 @@ def test_exhaustive_restriction_quantized(spark, multi_chunk):
     got = retrieve_toks(logical, toks, k=20).toPandas()
     assert len(got) > 0
     _same(got, retrieve_toks(_full_decode(logical), toks, k=20).toPandas())
-
-
-def test_exhaustive_restriction_above_driver_gate(spark, multi_chunk, monkeypatch):
-    """Above DRIVER_TERM_TABLE_MAX the ids come from a broadcast left-semi
-    join with (query terms ⋈ lexicon): same rows."""
-    idx, _ = multi_chunk
-    logical = idx.as_logical()
-    expect = retrieve(logical, QUERIES, k=20, include_query=False).toPandas()
-    idx._driver_cache.clear()
-    monkeypatch.setattr(index_store, "DRIVER_TERM_TABLE_MAX", 0)
-    res = retrieve(logical, QUERIES, k=20, include_query=False)
-    plan = res._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan
-    _assert_local(res)
-    assert not idx._driver_cache
-    _same(res.toPandas(), expect)
