@@ -116,7 +116,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--pretokenized", action="store_true")
     p.add_argument("--scale", type=float, default=100.0)
     p.add_argument("--block-size", type=int, default=128)
-    p.add_argument("--encoding", default="varint", choices=["varint", "bytepack", "bitpack"])
+    p.add_argument("--encoding", default="varint", choices=["varint", "bytepack", "bitpack"],
+                   help="Parquet writer settings for the posting lists (one layout, "
+                        "one reader): varint = dictionary pages + zstd, bytepack = "
+                        "plain pages + zstd, bitpack = DELTA_BINARY_PACKED + zstd")
     p.add_argument("--cpus", type=int, default=os.cpu_count() or 8)
     p.set_defaults(fn=cmd_index)
 

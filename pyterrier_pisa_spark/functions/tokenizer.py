@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F

@@ -22,11 +22,9 @@ the whole corpus through one task at 100 TB.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark import StorageLevel, TaskContext
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.tokenizer import termvec_udf
 

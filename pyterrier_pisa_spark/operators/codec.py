@@ -1,286 +1,180 @@
-"""Posting-list compression codec: delta-gap + LEB128 varint over numpy.
+"""Posting-block layout: Parquet integer lists, packed and flattened here.
 
-Replaces the reference's 14 SIMD codecs (``__init__.py:72-89``,
-``_pisathon.cpp:256-265``) with ONE codec — the reference's own test matrix
-proves encodings are rank-preserving perf variants (``tests/test_variants.py``),
-and BASELINE.json's north_star pins "delta-gap + varint-byte compressed"
-blocks of 128 postings. Both encode and decode are fully vectorized numpy
-(no per-value Python loops; the only loops are over byte-position (<=10
-iterations) — Arrow-batch friendly inside pandas UDFs).
+This is the one module that packs postings into blocks and flattens blocks
+back into postings; every consumer (the build's pack UDF, the kernels,
+``quantize_index``, ``ensure_term_stats``, ``LocalSearcher`` and the
+exhaustive plan) goes through it. A postings row is one block of at most
+``block_size`` postings of one term, docids strictly ascending:
 
-Layout per block (<= block_size postings, docids strictly ascending):
-  docids_delta: varint bytes of [docid[0] - base, docid[i] - docid[i-1], ...]
-  tfs:          varint bytes of [tf...]
-where ``base`` is the block's recorded ``docid_first`` predecessor convention:
-we store the first docid as a delta from 0 (raw value), keeping blocks
-self-contained and independently decodable (needed for block-max skipping:
-a skipped block is never touched).
+    count                      postings in the block
+    docid_first, docid_last    the block's docid range
+    docids_delta   array<int>  frame-of-reference offsets ``docid - docid_first``
+    tfs            array<int>  term frequencies (impacts after quantize_index)
+    doclens        array<int>  each posting's document length
+
+Every decoder gets docids as ``docid_first + offset`` (no prefix sum), so a
+block stays self-contained and a skipped block is never touched. Parquet
+does the integer coding, in C++ (pyarrow) or in the JVM (Spark); the Python
+side only builds Arrow list arrays from offsets and flattens them back.
+
+The reference's encoding names (``__init__.py:72-89``) stay as the
+``build_index(encoding=...)`` vocabulary. The reference's own test matrix
+treats encodings as rank-preserving storage variants
+(``tests/test_variants.py``), so here each name selects Parquet WRITER
+settings only; there is one reader:
+
+    varint     dictionary pages (bit-packed dictionary indexes) + zstd:
+               the smallest postings, the default
+    bytepack   plain fixed-width pages + zstd: no dictionary lookup
+    bitpack    the v2 writer, no dictionary: DELTA_BINARY_PACKED
+               (bit-packed miniblocks) + zstd
+
+Postings bytes of a 100k-doc build, relative to the varint-bytes layout
+this one replaced: varint 0.87, bytepack 1.00, bitpack 0.93 (snappy
+instead of zstd: 0.98 with dictionary pages, 1.69 with plain ones).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+LIST_COLUMNS = ("docids_delta", "tfs", "doclens")
+POSTINGS_SCHEMA = (
+    "term_id long, block_id long, count int, docid_first long, docid_last long, "
+    "block_max_score double, docids_delta array<int>, tfs array<int>, "
+    "doclens array<int>"
+)
+# serving memory per posting once the three lists are decoded (3 x int32)
+DECODED_BYTES_PER_POSTING = 12
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a 1-D array of non-negative ints, vectorized."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    offsets = np.concatenate(([0], np.cumsum(nbytes)))[:-1]
-    out = np.zeros(int(offsets[-1] + nbytes[-1]), dtype=np.uint8)
-    maxb = int(nbytes.max())
-    for j in range(maxb):
-        mask = nbytes > j
-        byte = ((v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] - 1 > j).astype(np.uint8) << 7
-        out[offsets[mask] + j] = byte | cont
-    return out.tobytes()
+def segment_starts(counts: np.ndarray) -> np.ndarray:
+    """Start of each segment in the concatenation of segments of ``counts``."""
+    return np.concatenate(([0], np.cumsum(counts)))[:-1].astype(np.int64)
 
 
-def varint_decode(buf: bytes | bytearray | memoryview, count: int | None = None) -> np.ndarray:
-    """Decode LEB128 bytes back to a uint64 array, vectorized."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    n_values = int(is_last.sum())
-    grp = np.zeros(b.shape, dtype=np.int64)
-    grp[1:] = np.cumsum(is_last[:-1])
-    starts = np.zeros(n_values, dtype=np.int64)
-    starts[1:] = np.flatnonzero(is_last)[:-1] + 1
-    pos = np.arange(b.size, dtype=np.int64) - starts[grp]
-    vals = np.zeros(n_values, dtype=np.uint64)
-    np.bitwise_or.at(vals, grp, (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64)))
-    if count is not None and n_values != count:
-        raise ValueError(f"varint_decode: expected {count} values, got {n_values}")
-    return vals
+def gather_index(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Positions of the segments ``[starts[i], starts[i] + counts[i])``,
+    concatenated in order: one vectorized gather for many blocks."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return np.repeat(np.asarray(starts, dtype=np.int64) - segment_starts(counts),
+                     counts) + np.arange(int(counts.sum()), dtype=np.int64)
 
 
-def varint_nbytes(values: np.ndarray) -> np.ndarray:
-    """Per-value LEB128 byte length (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    return nbytes
+def encode_docids(docids: np.ndarray, starts: np.ndarray,
+                  counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenated ascending docid segments -> (docid_first per segment,
+    frame-of-reference offsets)."""
+    first = docids[starts]
+    return first, docids - np.repeat(first, counts)
 
 
-def varint_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> list[bytes]:
-    """Encode a flat value array ONCE, then split the byte stream at segment
-    boundaries — one vectorized pass for thousands of blocks instead of one
-    call per block (the per-block-Python killer in posting packing)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return []
-    buf = varint_encode(v)
-    nb = varint_nbytes(v)
-    byte_offsets = np.concatenate(([0], np.cumsum(nb)))
-    seg_bounds = byte_offsets[seg_starts]
-    ends = np.concatenate((seg_bounds[1:], [len(buf)]))
-    return [buf[a:b] for a, b in zip(seg_bounds, ends)]
+def decode_docids(first: np.ndarray, offsets: np.ndarray,
+                  counts: np.ndarray) -> np.ndarray:
+    return np.repeat(np.asarray(first, dtype=np.int64), counts) + offsets
 
 
-def varint_decode_segments(bufs, counts) -> np.ndarray:
-    """Decode MANY blocks' buffers in one vectorized pass (LEB128 is
-    self-delimiting, so concatenation decodes identically) — the read-side
-    twin of ``varint_encode_segments``. Returns the concatenated uint64
-    values; split at ``cumsum(counts)`` boundaries."""
-    total = int(np.sum(counts))
-    return varint_decode(b"".join(bufs), total)
+def list_array(values: np.ndarray, counts: np.ndarray) -> pa.ListArray:
+    """Flat values + per-row counts -> an ``array<int>`` Arrow column."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets),
+                                    pa.array(np.asarray(values, dtype=np.int32)))
 
 
-def delta_decode_segments(gaps: np.ndarray, seg_starts: np.ndarray) -> np.ndarray:
-    """Per-segment cumulative sum over a flat concatenated gap array (each
-    segment's first gap is the raw value): ONE global cumsum minus the
-    per-segment base, no Python loop."""
-    g = np.asarray(gaps, dtype=np.int64)
-    if g.size == 0:
-        return g
-    c = np.cumsum(g)
-    starts = np.asarray(seg_starts, dtype=np.int64)
-    base = np.zeros(starts.size, dtype=np.int64)
-    base[1:] = c[starts[1:] - 1]
-    reps = np.diff(np.concatenate((starts, [g.size])))
-    return c - np.repeat(base, reps)
+def flat_values(col) -> np.ndarray:
+    """A list column (Arrow array or chunked array) -> all its values."""
+    return pc.list_flatten(col).to_numpy()
 
 
-def delta_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> np.ndarray:
-    """Per-segment delta gaps over a flat concatenated array (first element
-    of each segment stored raw)."""
-    v = np.asarray(values, dtype=np.int64)
-    if v.size == 0:
-        return v
-    gaps = np.empty_like(v)
-    gaps[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=gaps[1:])
-    gaps[seg_starts] = v[seg_starts]
-    return gaps
+def block_batch(term_id, block_id, docids, tfs, doclens, counts,
+                block_max_score) -> pa.RecordBatch:
+    """Concatenated postings, cut into consecutive blocks of ``counts`` ->
+    one Arrow batch of postings rows (``POSTINGS_SCHEMA``)."""
+    starts = segment_starts(counts)
+    first, offsets = encode_docids(docids, starts, counts)
+    return pa.RecordBatch.from_arrays([
+        pa.array(term_id, pa.int64()), pa.array(block_id, pa.int64()),
+        pa.array(counts, pa.int32()), pa.array(first, pa.int64()),
+        pa.array(docids[starts + counts - 1], pa.int64()),
+        pa.array(block_max_score, pa.float64()),
+        list_array(offsets, counts), list_array(tfs, counts),
+        list_array(doclens, counts),
+    ], names=["term_id", "block_id", "count", "docid_first", "docid_last",
+              "block_max_score", *LIST_COLUMNS])
 
 
-def delta_encode(docids: np.ndarray) -> np.ndarray:
-    """Strictly-ascending docids -> gaps (first value raw). Equivalent to the
-    SQL-oracle form ``docid - lag(docid) over (partition by term order by
-    docid)`` with the first gap = docid (SURVEY.md §2.5)."""
-    d = np.asarray(docids, dtype=np.int64)
-    out = np.empty_like(d)
-    if d.size:
-        out[0] = d[0]
-        np.subtract(d[1:], d[:-1], out=out[1:])
-    return out
+def decode_arrow(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Postings rows as an Arrow batch or table -> (docids, tfs, doclens,
+    counts), postings concatenated in row order."""
+    counts = blocks.column("count").to_numpy().astype(np.int64)
+    d = decode_docids(blocks.column("docid_first").to_numpy(),
+                      flat_values(blocks.column("docids_delta")), counts)
+    return (d, flat_values(blocks.column("tfs")),
+            flat_values(blocks.column("doclens")), counts)
 
 
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    return np.cumsum(np.asarray(gaps, dtype=np.int64))
+def _concat(cells) -> np.ndarray:
+    arrs = cells.to_numpy() if hasattr(cells, "to_numpy") else cells
+    return np.concatenate(arrs) if len(arrs) else np.empty(0, dtype=np.int32)
 
 
-def encode_block(docids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
-    return varint_encode(delta_encode(docids).astype(np.uint64)), varint_encode(
-        np.asarray(tfs, dtype=np.uint64)
-    )
+def decode_frame(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Postings rows as a pandas frame (the kernels' ``applyInPandas``
+    input: one ndarray per list cell) -> float64-ready (docids, tfs,
+    doclens), concatenated in row order."""
+    counts = rows["count"].to_numpy(np.int64)
+    d = decode_docids(rows["docid_first"].to_numpy(np.int64),
+                      _concat(rows["docids_delta"]), counts)
+    return (d, _concat(rows["tfs"]).astype(np.float64),
+            _concat(rows["doclens"]).astype(np.float64))
 
 
-def decode_block(docids_delta: bytes, tfs: bytes, count: int) -> tuple[np.ndarray, np.ndarray]:
-    d = delta_decode(varint_decode(docids_delta, count).astype(np.int64))
-    t = varint_decode(tfs, count).astype(np.int64)
-    return d, t
+def flat_postings(blocks):
+    """Blocks -> (term_id, docid, tf, doclen) rows, decoded in the JVM:
+    ``explode(arrays_zip(transform(docids_delta, x -> docid_first + x),
+    tfs, doclens))``. No Python stage."""
+    from pyspark.sql import functions as F
 
-
-# ------------------------------------------------------- encoding registry
-
-def bitpack_encode(values: np.ndarray) -> bytes:
-    """Block-level bitpacking: 1 header byte (bit width 0..64) followed by
-    every value packed at exactly that width, little-endian bit order — the
-    reference's default ``block_simdbp`` encoding family
-    (``__init__.py:72-89``: per-128-block bit-packed with a per-block width;
-    the SIMD unpacking is an execution detail, the FORMAT idea is the
-    per-block fixed bit width). Denser than bytepack whenever the block's max
-    gap isn't a power-of-256, denser than varint on uniform gaps."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b"\x00"
-    mx = int(v.max())
-    w = mx.bit_length()
-    if w == 0:
-        return b"\x00"
-    bits = ((v[:, None] >> np.arange(w, dtype=np.uint64)) & np.uint64(1)
-            ).astype(np.uint8).ravel()
-    return bytes([w]) + np.packbits(bits, bitorder="little").tobytes()
-
-
-def bitpack_decode(buf: bytes | bytearray | memoryview,
-                   count: int | None = None) -> np.ndarray:
-    # count is MANDATORY (unlike the self-delimiting varint / width-header
-    # bytepack): the last byte's pad bits are indistinguishable from packed
-    # values, so a count-less decode would return spurious trailing values
-    # (e.g. 3 values at width 3 "decode" as 5). The block header stores count.
-    if count is None:
-        raise ValueError("bitpack_decode: count is required (pad bits of the "
-                         "final byte are not self-delimiting)")
-    b = memoryview(buf)
-    if len(b) == 0:
-        return np.empty(0, dtype=np.uint64)
-    w = b[0]
-    if w == 0:
-        return np.zeros(count, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(b[1:], dtype=np.uint8), bitorder="little")
-    n = bits.size // w
-    vals = (bits[: n * w].reshape(n, w).astype(np.uint64)
-            << np.arange(w, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
-    if count is not None:
-        if n < count:
-            raise ValueError(f"bitpack_decode: expected {count} values, got {n}")
-        vals = vals[:count]  # trailing pad bits of the last byte
-    return vals
-
-
-def bitpack_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> list[bytes]:
-    """Per-segment bitpack (widths chosen per block, like the reference's
-    per-block bit width); numpy per segment."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return []
-    starts = np.asarray(seg_starts, dtype=np.int64)
-    ends = np.concatenate((starts[1:], [v.size]))
-    return [bitpack_encode(v[a:b]) for a, b in zip(starts, ends)]
-
-
-def bytepack_encode(values: np.ndarray) -> bytes:
-    """Byte-aligned fixed-width encoding: 1 header byte (width 1/2/4/8)
-    followed by the values at that width, little-endian. The fixed-width
-    family of rank-preserving encodings (PISA ships SIMD variants of the
-    same idea): ~pure-memcpy decode, slightly larger than varint on skewed
-    gaps, faster on dense blocks."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b"\x01"
-    mx = int(v.max())
-    width = 1 if mx < (1 << 8) else 2 if mx < (1 << 16) else 4 if mx < (1 << 32) else 8
-    return bytes([width]) + v.astype(f"<u{width}").tobytes()
-
-
-def bytepack_decode(buf: bytes | bytearray | memoryview, count: int | None = None) -> np.ndarray:
-    b = memoryview(buf)
-    if len(b) == 0:
-        return np.empty(0, dtype=np.uint64)
-    width = b[0]
-    vals = np.frombuffer(b[1:], dtype=f"<u{width}").astype(np.uint64)
-    if count is not None and vals.size != count:
-        raise ValueError(f"bytepack_decode: expected {count} values, got {vals.size}")
-    return vals
-
-
-def bytepack_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> list[bytes]:
-    """Per-segment fixed-width encode. Widths are chosen PER SEGMENT (a
-    block with small gaps packs narrow even if another block needs 8 bytes),
-    so this is a per-segment loop over cheap tobytes() calls."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return []
-    starts = np.asarray(seg_starts, dtype=np.int64)
-    ends = np.concatenate((starts[1:], [v.size]))
-    return [bytepack_encode(v[a:b]) for a, b in zip(starts, ends)]
-
-
-def _generic_decode_segments(decode):
-    """Per-buffer fallback for codecs whose streams aren't concatenatable
-    (bytepack's per-block width header). Still one numpy concat, and
-    bytepack's per-call work is ~a memcpy."""
-    def _fn(bufs, counts):
-        arrs = [decode(b, int(c)) for b, c in zip(bufs, counts)]
-        return np.concatenate(arrs) if arrs else np.empty(0, dtype=np.uint64)
-    return _fn
+    z = F.arrays_zip(
+        F.transform("docids_delta", lambda x: F.col("docid_first") + x).alias("docid"),
+        F.col("tfs").alias("tf"), F.col("doclens").alias("doclen"))
+    return blocks.select("term_id", F.explode(z).alias("_p")).select(
+        "term_id", *(F.col(f"_p.{c}").cast("long").alias(c)
+                     for c in ("docid", "tf", "doclen")))
 
 
 class Codec:
-    """A posting-block encoding: segment-batched encode + decode (single
-    block and many-blocks-in-one-pass). Registered by name; the index's meta
-    records which codec wrote its blocks (reference ``index_encoding``,
-    ``__init__.py:72-89``)."""
+    """An encoding name and the Parquet writer options it selects. The
+    segment methods concatenate and split value lists, for callers that
+    handle one list column at a time."""
 
-    def __init__(self, name, encode, decode, encode_segments,
-                 decode_segments=None):
+    def __init__(self, name: str, writer_options: dict):
         self.name = name
-        self.encode = encode
-        self.decode = decode
-        self.encode_segments = encode_segments
-        self.decode_segments = decode_segments or _generic_decode_segments(decode)
+        self.writer_options = writer_options
+
+    @staticmethod
+    def decode_segments(cells, counts) -> np.ndarray:
+        vals = _concat(cells)
+        if vals.size != int(np.sum(counts)):
+            raise ValueError(f"decode_segments: expected {int(np.sum(counts))} "
+                             f"values, got {vals.size}")
+        return vals
+
+    @staticmethod
+    def encode_segments(values: np.ndarray, starts: np.ndarray) -> list[np.ndarray]:
+        return np.split(np.asarray(values, dtype=np.int32), np.asarray(starts)[1:])
 
 
 ENCODINGS = {
-    "varint": Codec("varint", varint_encode, varint_decode, varint_encode_segments,
-                    varint_decode_segments),
-    "bytepack": Codec("bytepack", bytepack_encode, bytepack_decode,
-                      bytepack_encode_segments),
-    "bitpack": Codec("bitpack", bitpack_encode, bitpack_decode,
-                     bitpack_encode_segments),
+    "varint": Codec("varint", {"compression": "zstd"}),
+    "bytepack": Codec("bytepack", {"compression": "zstd",
+                                   "parquet.enable.dictionary": "false"}),
+    "bitpack": Codec("bitpack", {"compression": "zstd",
+                                 "parquet.writer.version": "v2",
+                                 "parquet.enable.dictionary": "false"}),
 }
 DEFAULT_ENCODING = "varint"
 

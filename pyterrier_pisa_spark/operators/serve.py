@@ -23,14 +23,19 @@ float32-granularity top-k. Float64 sums accumulate in the SAME term-major
 order as the kernels' ``_merge_acc``, so scores are bit-identical.
 
 ``mode='blockmax'`` — runs the Spark paths' own pruned ``_taat_score`` kernel
-over the packed block frames (decode on demand). Slower per query but holds
-only the compressed blocks; useful to cross-check the dense engine and when
-memory is tight.
+over the block table (each block gathered from the flat postings on demand).
+Slower per query but holds no per-posting partials; useful to cross-check
+the dense engine and when memory is tight.
+
+Both engines construct from Arrow columns (the list columns flattened in
+one pass, no per-row Python objects) and need dense docids
+``0..num_docs-1``, which the index's ``max_docid`` stamp must prove.
 
 Scale contract: this is a SERVING-TIER component, not a data-path one. The
-guard refuses indexes above ``max_bytes`` (default 4 GiB — a single-node
-serving replica's budget, the same regime the reference operates in: its test
-collections are 192k-404k docs). Web-scale corpora stay on the Spark paths or
+guard refuses indexes whose decoded postings (12 B each) exceed
+``max_bytes`` (default 4 GiB — a single-node serving replica's budget, the
+same regime the reference operates in: its test collections are 192k-404k
+docs). Web-scale corpora stay on the Spark paths or
 shard across serving replicas by docid range (each replica = one
 ``LocalSearcher`` over a docid-sliced index; the per-replica top-k merge is
 exact, the same local-topk-then-merge argument as ``retrieve_blockmax``).
@@ -38,18 +43,33 @@ exact, the same local-topk-then-merge argument as ``retrieve_blockmax``).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.stopwords import DEFAULT_STOPWORDS, get_stopwords
 from ..functions.tokenizer import tokenize_queries
+from . import codec as C
 from . import score as S
-from .codec import get_codec
-from .wand import _decode_rows, _taat_score, _topk_frame
+from .wand import _taat_score
 
 _BLOCK_COLS = ["term_id", "block_id", "count", "docid_first", "docid_last",
-               "block_max_score", "docids_delta", "tfs", "doclens"]
+               "block_max_score", *C.LIST_COLUMNS]
+
+
+def _require_dense(index) -> None:
+    """Serving arrays are indexed by docid, sized by ``num_docs``: refuse an
+    index whose meta does not prove docids ``0..num_docs-1``."""
+    nd = int(index.stats["num_docs"])
+    mx = index.meta.get("max_docid")
+    if nd and (mx is None or int(mx) != nd - 1):
+        raise ValueError(
+            f"local serving needs dense docids 0..{nd - 1}, but the index's "
+            f"max_docid is {mx} (streamed indexes hash docids; indexes built "
+            "before the stamp have none): use the Spark paths "
+            "(retrieve_blockmax) or rebuild with build_index")
 
 
 def _topk_select(docids: np.ndarray, scores: np.ndarray,
@@ -192,98 +212,76 @@ class LocalSearcher:
         # ---- construction fast path (r6): a PRISTINE index (opened by
         # load_index, tables = raw parquet reads) constructs entirely
         # driver-side with pyarrow — zero Spark jobs. Filtered views
-        # (docid-range shards) and over-gate vocabularies keep the Spark
-        # collects (same values, bounded by the same budget guard).
-        from ..sources.index_store import driver_term_table
-        import os as _os
+        # (docid-range shards) and over-gate vocabularies read the same
+        # columns through Spark as Arrow (same values, same budget guard).
+        from ..sources.index_store import _read_arrow, _table_path, driver_term_table
 
+        _require_dense(index)
+        postings_dir = os.path.join(index.path, "postings")
         arrow_tbl = None
-        postings_dir = _os.path.join(index.path, "postings")
-        if getattr(index, "pristine", False) and _os.path.isdir(postings_dir):
+        if getattr(index, "pristine", False) and os.path.isdir(postings_dir):
             arrow_tbl = driver_term_table(index, scorer, self.k1, self.b, mu, c)
 
-        # ---- size guard: serving replicas hold the index in memory.
-        # compressed bytes gate the collect; the dense engine's decoded
-        # footprint is ~16 B/posting (int32 docid + float64 partial + slack),
-        # gated against the same budget below once counts are known.
+        # ---- size guard: serving replicas hold the decoded postings in
+        # memory. The count is the build's (meta), or for a view its own.
         if arrow_tbl is not None:
-            # parquet metadata upper bound of the three binary columns (data
-            # + 4 B/value length prefixes) — conservative, and read without
-            # touching any data page
-            import pyarrow.dataset as pads
-
-            nbytes = 0
-            for frag in pads.dataset(postings_dir).get_fragments():
-                md = frag.metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        if col.path_in_schema in ("docids_delta", "tfs", "doclens"):
-                            nbytes += col.total_uncompressed_size
+            nposts = int(meta["num_postings"])
         else:
-            nbytes = index.blocks.agg(
-                (F.sum(F.length("docids_delta")) + F.sum(F.length("tfs"))
-                 + F.sum(F.length("doclens"))).alias("nb")).collect()[0]["nb"] or 0
+            nposts = int(index.blocks.agg(F.sum("count")).collect()[0][0] or 0)
+        nbytes = C.DECODED_BYTES_PER_POSTING * nposts
         if nbytes > max_bytes:
             raise MemoryError(
-                f"index postings ~{nbytes/2**30:.1f} GiB exceed the local-"
+                f"index postings ~{nbytes/2**30:.1f} GiB decoded exceed the local-"
                 f"serving budget ({max_bytes/2**30:.1f} GiB); use the Spark "
                 "paths (retrieve_blockmax) or shard by docid range across "
                 "serving replicas")
 
         # ---- term table: term -> (term_id, stat, max_score, min_score)
         if arrow_tbl is not None:
-            lex = pd.DataFrame({
-                "term": arrow_tbl["index"].to_numpy(object),
-                "term_id": arrow_tbl["term_id"],
-                "stat": arrow_tbl["stat"],
-                "ms": arrow_tbl["ms"],
-                "mn": arrow_tbl["mn"],
-            })
+            terms = arrow_tbl["index"].tolist()
+            lex = [arrow_tbl[c] for c in ("term_id", "stat", "ms", "mn")]
         else:
             stat_col = S.term_stat_col(scorer)
             ts = ensure_term_stats(index, scorer, k1=self.k1, b=self.b, mu=mu, c=c)
-            lex = index.lexicon.select(
-                "term", "term_id", F.col(stat_col).alias("stat")).join(
+            t = index.lexicon.select(
+                "term", "term_id", F.col(stat_col).cast("double").alias("stat")).join(
                 ts.withColumnRenamed("max_score", "ms")
                   .withColumnRenamed("min_score", "mn"), "term_id", "left"
-            ).fillna({"ms": 0.0, "mn": 0.0}).toPandas()
-        self._terms = {
-            r.term: (int(r.term_id), float(r.stat), float(r.ms), float(r.mn))
-            for r in lex.itertuples()
-        }
+            ).fillna({"ms": 0.0, "mn": 0.0}).toArrow()
+            terms = t.column("term").to_pylist()
+            lex = [t.column(c).to_numpy() for c in ("term_id", "stat", "ms", "mn")]
+        self._terms = dict(zip(terms, zip(*(a.tolist() for a in lex))))
 
-        # ---- block table, sorted so each term is one contiguous slice
+        # ---- postings, flattened once and ordered by (term_id, block_id) so
+        # each term is one contiguous slice
         if arrow_tbl is not None:
-            import pyarrow.dataset as pads
-
-            blk = pads.dataset(postings_dir).to_table(
-                columns=list(_BLOCK_COLS)).to_pandas()
+            blk = _read_arrow(postings_dir, _BLOCK_COLS)
         else:
-            blk = index.blocks.select(*_BLOCK_COLS).toPandas()
-        blk = blk.sort_values(["term_id", "block_id"], kind="stable",
-                              ignore_index=True)
-        self._codec = get_codec(meta.get("encoding"))
+            blk = index.blocks.select(*_BLOCK_COLS).toArrow()
+        d_all, tf_all, dl_all, counts = C.decode_arrow(blk)
+        tid_b = blk.column("term_id").to_numpy()
+        order = np.lexsort((blk.column("block_id").to_numpy(), tid_b))
+        post = C.gather_index(C.segment_starts(counts)[order], counts[order])
+        d_all, tf_all, dl_all = d_all[post], tf_all[post], dl_all[post]
+        counts, tid_b = counts[order], tid_b[order]
+        # the scorer's per-term statistic, looked up by term_id
+        stat_of = np.zeros(int(max(lex[0].max(initial=-1), tid_b.max(initial=-1))) + 1)
+        stat_of[lex[0]] = lex[1]
         partial = S.np_partial_fn(scorer, self.stats, self.k1, self.b, mu, c)
 
         if mode == "dense":
-            counts = blk["count"].to_numpy(np.int64)
             nposts = int(counts.sum())
             if 16 * nposts > max_bytes:
                 raise MemoryError(
                     f"~{16*nposts/2**30:.1f} GiB decoded exceeds the local-"
                     f"serving budget; use mode='blockmax' or shard replicas")
-            d_all, tf_all, dl_all, counts, _starts = _decode_rows(blk, self._codec)
-            stat_by_tid = dict(zip(lex["term_id"].astype(int), lex["stat"].astype(float)))
-            row_stat = blk["term_id"].map(stat_by_tid).to_numpy(np.float64)
             # pre-computed per-posting partial (float64 — per-query sums must
             # be bit-identical to the kernels')
-            p_all = partial(tf_all, dl_all, np.repeat(row_stat, counts))
-            post_tid = np.repeat(blk["term_id"].to_numpy(np.int64), counts)
-            self._post_d = d_all.astype(np.int64)
+            p_all = partial(tf_all.astype(np.float64), dl_all.astype(np.float64),
+                            np.repeat(stat_of[tid_b], counts))
+            self._post_d = d_all
             self._post_p = np.ascontiguousarray(p_all, dtype=np.float64)
-            self._post_tid_sorted = post_tid  # ascending (blk sorted by tid)
+            self._post_tid_sorted = np.repeat(tid_b, counts)  # ascending
             self._blocks = None
             self._tid_sorted = None
             # dense accumulators, reused across queries (reset touched-only)
@@ -330,8 +328,14 @@ class LocalSearcher:
             if self._all_pos and dense_cache_bytes > 0:
                 self._build_dense_cache(dense_cache_bytes, nd)
         else:
-            self._blocks = blk
-            self._tid_sorted = blk["term_id"].to_numpy(np.int64)
+            # block metadata only; _decode_block gathers a frame's postings
+            cols = ("block_id", "docid_first", "docid_last", "block_max_score")
+            self._blocks = pd.DataFrame({
+                "term_id": tid_b, "count": counts,
+                "start": C.segment_starts(counts),
+                **{c: blk.column(c).to_numpy()[order] for c in cols}})
+            self._flat = (d_all, tf_all.astype(np.float64), dl_all.astype(np.float64))
+            self._tid_sorted = tid_b
             self._post_d = self._post_p = self._post_tid_sorted = None
             self._all_pos = False
             self._dvecs = {}
@@ -341,15 +345,13 @@ class LocalSearcher:
         # (scatter by docid — input order is irrelevant, so the fast path
         # needs no sort)
         if arrow_tbl is not None:
-            from ..sources.index_store import _read_parquet_pandas, _table_path
-
-            dmp = _table_path(index.path, meta, "docmap") \
-                or _table_path(index.path, meta, "fwd")
-            dm = _read_parquet_pandas(dmp, ["docid", "docno"])
+            dm = _read_arrow(_table_path(index.path, meta, "docmap")
+                             or _table_path(index.path, meta, "fwd"), ["docid", "docno"])
         else:
-            dm = index.docmap.select("docid", "docno").toPandas()
+            dm = index.docmap.select("docid", "docno").toArrow()
         docnos = np.empty(int(self.stats["num_docs"]), dtype=object)
-        docnos[dm["docid"].to_numpy(np.int64)] = dm["docno"].to_numpy(object)
+        docnos[dm.column("docid").to_numpy()] = \
+            dm.column("docno").to_numpy(zero_copy_only=False)
         self._docnos = docnos
 
         self._partial = partial
@@ -509,8 +511,12 @@ class LocalSearcher:
                 by_term[tid] = self._blocks.iloc[lo:hi]
         if not by_term:
             return None, None
-        return _taat_score(terms, by_term, self._partial, self._codec, k,
+        return _taat_score(terms, by_term, self._partial, self._decode_block, k,
                            conjunctive, self._use_block_max)
+
+    def _decode_block(self, frame: pd.DataFrame):
+        post = C.gather_index(frame["start"].to_numpy(), frame["count"].to_numpy())
+        return tuple(a[post] for a in self._flat)
 
     def _run(self, qinfo: dict, k: int, conjunctive: bool,
              cast_float32: bool) -> pd.DataFrame:

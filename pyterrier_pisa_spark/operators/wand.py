@@ -46,29 +46,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.stopwords import DEFAULT_STOPWORDS
+from . import codec as C
 from . import score as S
-from .codec import get_codec
 from .retrieve import (DEFAULT_NUM_RESULTS, QTERMS_SCHEMA, QUERIES_SCHEMA,
                        local_relation)
-
-
-def _decode_rows(rows_pdf, codec) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a FRAME of packed block rows in one segment-batched pass
-    (no per-block Python decode): returns (docids, tfs, doclens, counts,
-    seg_starts), concatenated in row order."""
-    from .codec import delta_decode_segments
-
-    counts = rows_pdf["count"].to_numpy(np.int64)
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    gaps = codec.decode_segments(list(rows_pdf["docids_delta"]), counts)
-    d = delta_decode_segments(gaps.astype(np.int64), starts)
-    t = codec.decode_segments(list(rows_pdf["tfs"]), counts).astype(np.float64)
-    dl = codec.decode_segments(list(rows_pdf["doclens"]), counts).astype(np.float64)
-    return d, t, dl, counts, starts
 
 
 def _merge_acc(acc_d, acc_s, new_d, new_s):
@@ -85,11 +70,12 @@ def _merge_acc(acc_d, acc_s, new_d, new_s):
     return uniq, out
 
 
-def _taat_score(terms, by_term, partial, codec, k, conjunctive, use_block_max):
+def _taat_score(terms, by_term, partial, decode, k, conjunctive, use_block_max):
     """Shared TAAT core: terms = [(term_id, qweight, stat, max_score,
     block_scale, min_score)] sorted by max_score desc, over per-term block
     frames -> (docids, scores) — exact: only docs provably outside any
-    possible top-k are skipped.
+    possible top-k are skipped. ``decode(frame)`` returns the frame's
+    (docids, tfs, doclens), e.g. ``codec.decode_frame``.
 
     ``partial(tf, dl, stat)`` is the scorer's vectorized per-posting partial.
     ``use_block_max``: trust block_scale * stored per-block max as the block
@@ -145,7 +131,7 @@ def _taat_score(terms, by_term, partial, codec, k, conjunctive, use_block_max):
                 grp = grp[keep]
         if len(grp):
             # surviving blocks decode in ONE segment-batched pass
-            new_d, tf, dl, _cnt, _st = _decode_rows(grp, codec)
+            new_d, tf, dl = decode(grp)
             new_s = qw * partial(tf, dl, float(st))
             acc_d, acc_s = _merge_acc(acc_d, acc_s, new_d, new_s)
             if conjunctive:
@@ -189,7 +175,7 @@ def _empty_frame():
                          "rank": pd.Series(dtype=np.int32)})
 
 
-def make_query_kernel(qinfo: dict, partial, codec, k: int,
+def make_query_kernel(qinfo: dict, partial, k: int,
                       conjunctive: bool = False, use_block_max: bool = True):
     """Per-(qid, task_group) applyInPandas kernel. ``qinfo``: qid -> list of
     (term_id, qweight, stat, max_score), sorted by max_score desc. Emits the
@@ -208,7 +194,7 @@ def make_query_kernel(qinfo: dict, partial, codec, k: int,
             return _empty_frame()
         by_term = {int(tid): grp.sort_values("block_id")
                    for tid, grp in pdf.groupby("term_id")}
-        acc_d, acc_s = _taat_score(terms, by_term, partial, codec, k,
+        acc_d, acc_s = _taat_score(terms, by_term, partial, C.decode_frame, k,
                                    conjunctive, use_block_max)
         if acc_d.size == 0:
             return _empty_frame()
@@ -217,7 +203,7 @@ def make_query_kernel(qinfo: dict, partial, codec, k: int,
     return kernel
 
 
-def make_batch_kernel(qinfo: dict, partial, codec, k: int, chunk_span: int,
+def make_batch_kernel(qinfo: dict, partial, k: int, chunk_span: int,
                       conjunctive: bool = False, query_block: int = 64,
                       dense_cells: int = 8 << 20, n_qgroups: int = 1,
                       emit_rank: bool = False):
@@ -290,7 +276,8 @@ def make_batch_kernel(qinfo: dict, partial, codec, k: int, chunk_span: int,
             # via repeat, every np partial accepts array stats); a stable
             # argsort then groups the postings by term row — no per-block
             # Python loop anywhere on the decode path
-            d_all, tf_all, dl_all, counts, _starts = _decode_rows(cpdf, codec)
+            d_all, tf_all, dl_all = C.decode_frame(cpdf)
+            counts = cpdf["count"].to_numpy(np.int64)
             d_all -= base
             row_trows = np.array([tid_row[int(t)] for t in cpdf["term_id"]],
                                  dtype=np.int64)
@@ -472,8 +459,7 @@ def _query_plan_inputs(index, queries, k1, b, mu, c, scorer, stopwords,
         )
     for qid in qinfo:
         qinfo[qid].sort(key=lambda t: -t[3])
-    codec = get_codec(meta.get("encoding"))
-    return spark, qinfo, partial, codec, use_block_max
+    return spark, qinfo, partial, use_block_max
 
 
 def _finalize_blockmax(spark, index, local: DataFrame, queries, k,
@@ -577,7 +563,7 @@ def retrieve_blockmax(
     local top-k (no single-task hot-query bottleneck)."""
     if queries_toks is not None:
         include_query = False
-    spark, qinfo, partial, codec, use_block_max = _query_plan_inputs(
+    spark, qinfo, partial, use_block_max = _query_plan_inputs(
         index, queries, k1, b, mu, c, scorer, stopwords,
         queries_toks=queries_toks, toks_scale=toks_scale)
 
@@ -597,7 +583,7 @@ def retrieve_blockmax(
         "qid", "task_group", "term_id", "block_id", "count", "docid_first",
         "docid_last", "block_max_score", "docids_delta", "tfs", "doclens"
     )
-    kernel = make_query_kernel(qinfo, partial, codec, k, conjunctive=conjunctive,
+    kernel = make_query_kernel(qinfo, partial, k, conjunctive=conjunctive,
                                use_block_max=use_block_max)
     # explicit repartition on the group keys: satisfies the groupBy's
     # distribution (no second exchange) AND is exempt from AQE partition
@@ -646,7 +632,7 @@ def retrieve_blockmax_batch(
     Results are rank- and score-identical to the exhaustive plan."""
     if queries_toks is not None:
         include_query = False
-    spark, qinfo, partial, codec, _ubm = _query_plan_inputs(
+    spark, qinfo, partial, _ubm = _query_plan_inputs(
         index, queries, k1, b, mu, c, scorer, stopwords,
         queries_toks=queries_toks, toks_scale=toks_scale)
     tids = sorted({t[0] for terms in qinfo.values() for t in terms})
@@ -672,7 +658,7 @@ def retrieve_blockmax_batch(
     # kernel's local top-k IS the global answer — it emits ranks directly and
     # the window merge exchange is skipped below (guide §2.4)
     single_chunk = _single_chunk(index, chunk_span)
-    kernel = make_batch_kernel(qinfo, partial, codec, k, chunk_span,
+    kernel = make_batch_kernel(qinfo, partial, k, chunk_span,
                                conjunctive=conjunctive, n_qgroups=n_qgroups,
                                emit_rank=single_chunk)
     # explicit repartition: same AQE-coalescing exemption as the per-query

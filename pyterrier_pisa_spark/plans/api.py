@@ -49,11 +49,14 @@ class PisaScorer(Enum):
 
 
 class PisaIndexEncoding(Enum):
-    """This engine's posting-block encodings (reference ``PisaIndexEncoding``
-    lists 14 SIMD variants, ``__init__.py:72-89``; the reference's own test
-    matrix proves encodings are rank-preserving perf variants, so this engine
-    ships the three FORMAT families: varint (LEB128), bytepack (fixed byte
-    width), bitpack (per-block fixed bit width — the block_simdbp family))."""
+    """Posting storage variants (reference ``PisaIndexEncoding`` lists 14
+    SIMD variants, ``__init__.py:72-89``; the reference's own test matrix
+    proves encodings are rank-preserving storage variants). Every index has
+    one layout, Parquet ``array<int>`` posting lists; a name selects only the
+    Parquet writer settings (``operators/codec.py``): varint = dictionary
+    pages + zstd (the default), bytepack = plain fixed-width pages + zstd,
+    bitpack = the v2 writer's DELTA_BINARY_PACKED (bit-packed miniblocks,
+    the block_simdbp family) + zstd."""
     varint = "varint"
     bytepack = "bytepack"
     bitpack = "bitpack"

@@ -20,11 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import build as B
+from ..operators import codec as C
 from ..operators import retrieve as R
-from ..operators.codec import decode_block, encode_block
 from ..plans.pipeline import LogicalIndex, build_logical_index
-from ..sources.corpus import load_documents
 
 # Fixed embedded query set over the testdata ``documents`` vocabulary
 # (FIXTURES.md §3: includes an OOV term, a very common term, a rare pair).
@@ -119,8 +117,9 @@ def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_delta_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-gaps via a REAL encode->decode roundtrip through the varint codec
-    (per term), compared against the SQL lag() oracle."""
+    """Delta-gaps of docids that made a REAL encode->decode roundtrip through
+    the posting layout's frame-of-reference docids (per term), compared
+    against the SQL lag() oracle."""
     idx = _index(spark, sf_dir)
 
     def _roundtrip(batches):
@@ -133,9 +132,9 @@ def q_delta_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf = pd.concat(chunks, ignore_index=True)
             for term, grp in pdf.groupby("term"):
                 docids = np.sort(grp["docid"].to_numpy())
-                tfs = np.ones(len(docids), dtype=np.int64)
-                db, tb = encode_block(docids, tfs)
-                d2, _ = decode_block(db, tb, len(docids))
+                counts = np.array([len(docids)])
+                first, offsets = C.encode_docids(docids, np.array([0]), counts)
+                d2 = C.decode_docids(first, offsets, counts)
                 gaps = np.empty_like(d2)
                 gaps[0] = d2[0]
                 gaps[1:] = d2[1:] - d2[:-1]

@@ -9,6 +9,8 @@ Layout (SURVEY.md §1.4 Spark mapping of the reference's flat-file artifact):
       term_stats/        (term_id, max_score)           [scorer-keyed, B7]
       postings/          (term_id, block_id, count, docid_first, docid_last,
                           block_max_score, docids_delta, tfs, doclens)
+                         the last three are array<int> columns; layout and
+                         per-encoding writer settings in operators/codec.py
       metrics/           (phase, partition_id, docs, postings, bytes, ts)
       _phases/<name>.done  checkpoint markers (JSON payload)
 
@@ -32,9 +34,10 @@ the reference's batch-shard -> merge boundary, ``indexers.py:89-120`` +
   4. maxscore per-term max of block maxes -> term_stats (scorer-keyed like
               the reference's WAND-data cache, ``_pisathon.cpp:229-255``).
 
-Per-posting ``doclens`` are packed inside each block: +~1 byte/posting buys
-query-time scoring with ZERO joins (no docid->doclen lookup shuffle), which
-is the right trade for a read-heavy index.
+Per-posting ``doclens`` are stored inside each block: a few bits per posting
+buy query-time scoring with ZERO joins (no docid->doclen lookup shuffle),
+which is the right trade for a read-heavy index. ``meta.json`` carries
+``version``; ``load_index`` refuses any other version.
 """
 
 from __future__ import annotations
@@ -47,17 +50,19 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import porter2 as _p2
 from ..operators import build as B
 from ..operators import score as S
-from ..operators.codec import delta_encode_segments, get_codec
+from ..operators import codec as C
 from ..operators.retrieve import local_relation
 from ..plans.pipeline import LogicalIndex, prepare_corpus
 
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2  # 2: postings lists are array<int>, docids frame-of-reference
 
 # Parquet row-group target for the postings tables. The default writer target
 # (128 MB) lets a small/mid-scale index collapse into ONE row group per file —
@@ -70,10 +75,7 @@ FORMAT_VERSION = 1
 POSTINGS_PARQUET_BLOCK_BYTES = 16 << 20
 DEFAULT_CHUNK_SPAN = 1 << 16  # docids per chunk row (bounds collect_list row size)
 
-POSTINGS_SCHEMA = (
-    "term_id long, block_id long, count int, docid_first long, docid_last long, "
-    "block_max_score double, docids_delta binary, tfs binary, doclens binary"
-)
+
 def _marker(path: str, name: str) -> str:
     return os.path.join(path, "_phases", f"{name}.done")
 
@@ -98,7 +100,6 @@ def _append_metrics(spark: SparkSession, path: str, phase: str, rows: list[tuple
     parquet in the same directory, fully readable as one Spark/DuckDB table."""
     import uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     cols = list(zip(*rows)) if rows else [[]] * 6
@@ -308,7 +309,6 @@ def build_index(
             pdf = agg.limit(B.SMALL_VOCAB_MAX + 1).toPandas()
         ldir = os.path.join(path, "lexicon")
         if len(pdf) <= B.SMALL_VOCAB_MAX:
-            import pyarrow as pa
             import pyarrow.parquet as papq
 
             pdf = pdf.sort_values("term", ignore_index=True)
@@ -349,9 +349,9 @@ def build_index(
                               chunk_span, num_partitions, encoding,
                               lex_pdf=small_lex_pdf)
         _append_metrics(spark, path, "postings",
-                        [("postings", -1, agg["blocks"], agg["postings"] or 0, agg["bytes"] or 0, time.time())])
-        _commit_phase(path, "postings", {"blocks": agg["blocks"], "postings": int(agg["postings"] or 0),
-                                         "compressed_bytes": int(agg["bytes"] or 0), "sec": time.time() - t1})
+                        [("postings", -1, agg["blocks"], agg["postings"], agg["bytes"], time.time())])
+        _commit_phase(path, "postings", {"blocks": agg["blocks"], "postings": agg["postings"],
+                                         "compressed_bytes": agg["bytes"], "sec": time.time() - t1})
 
     # ---------------------------------------------------- phase 4: maxscore
     if not _phase_done(path, "maxscore"):
@@ -365,7 +365,6 @@ def build_index(
         nblocks = json.load(open(_marker(path, "postings"))).get("blocks", 0) \
             if _phase_done(path, "postings") else (1 << 62)
         if nblocks <= 20_000_000:
-            import pyarrow as pa
             import pyarrow.dataset as pads
             import pyarrow.parquet as papq
 
@@ -433,6 +432,8 @@ def build_index(
         "encoding": encoding,
         "scorer": {"name": "bm25", "k1": k1, "b": b},
         "stats": stats,
+        # from the postings write's Observation; sizes the serving budget
+        "num_postings": json.load(open(_marker(path, "postings")))["postings"],
         # largest docid, from the phase-1 write's Observation (or the
         # streamed/CIFF ingest's own stats): the single-chunk query fast
         # paths switch on only when it proves every docid lies in chunk 0
@@ -493,73 +494,49 @@ def _fwd_to_tf(fwd: DataFrame) -> DataFrame:
              F.col("_e.tf").cast("int").alias("tf"), "doclen")
 
 
-def make_block_packer(codec, block_size: int, blocks_per_chunk: int,
+def make_block_packer(block_size: int, blocks_per_chunk: int,
                       k1: float, b: float, avgdl: float):
-    """The invert's pack kernel as a standalone ``mapInPandas`` function:
+    """The invert's pack kernel as a standalone ``mapInArrow`` function:
     self-contained (term_id, chunk, docids[], tfdls[]) array rows -> packed
-    128-posting block rows. Module-level (not a closure of ``_build_postings``)
-    so the block invariants — chunk-locality, strictly increasing block_id,
-    count <= block_size, byte-exact codec roundtrip — are property-fuzzable
-    without a SparkSession (``tests/test_codec.py``)."""
+    block rows (``codec.POSTINGS_SCHEMA``). Module-level (not a closure of
+    ``_build_postings``) so the block invariants — chunk-locality, strictly
+    increasing block_id, count <= block_size, exact roundtrip — are
+    property-fuzzable without a SparkSession.
 
-    def _pack_segments(tid, bid, seg_starts, seg_lengths, d, t, l):
-        """A batch of segments (each <= block_size) -> block rows, vectorized.
-
-        block_max_score holds the scorer-INDEPENDENT-of-df "rest" factor
-            rest(tf, dl) = (k1+1)*tf / (tf + k1*(1-b + b*dl/avgdl))
-        (meta block_max_kind='bm25_rest'); the true BM25 block bound is
-        idf(df) * rest, reconstructed at query time (idf is per-term, known
-        to the kernels from the lexicon join)."""
-        out_starts = np.concatenate(([0], np.cumsum(seg_lengths)))[:-1]
-        idx = np.repeat(seg_starts - out_starts, seg_lengths) + np.arange(
-            int(seg_lengths.sum()), dtype=np.int64
-        )
-        sel_d, sel_t, sel_l = d[idx], t[idx].astype(np.float64), l[idx].astype(np.float64)
-        scores = (k1 + 1.0) * sel_t / (sel_t + k1 * (1.0 - b + b * sel_l / avgdl))
-        bmax = np.maximum.reduceat(scores, out_starts)
-        ends = out_starts + seg_lengths - 1
-        gaps = delta_encode_segments(sel_d, out_starts)
-        return pd.DataFrame({
-            "term_id": tid, "block_id": bid,
-            "count": seg_lengths.astype(np.int32),
-            "docid_first": sel_d[out_starts], "docid_last": sel_d[ends],
-            "block_max_score": bmax,
-            "docids_delta": codec.encode_segments(gaps.astype(np.uint64), out_starts),
-            "tfs": codec.encode_segments(sel_t.astype(np.uint64), out_starts),
-            "doclens": codec.encode_segments(sel_l.astype(np.uint64), out_starts),
-        })
+    block_max_score holds the scorer-INDEPENDENT-of-df "rest" factor
+        rest(tf, dl) = (k1+1)*tf / (tf + k1*(1-b + b*dl/avgdl))
+    (meta block_max_kind='bm25_rest'); the true BM25 block bound is
+    idf(df) * rest, reconstructed at query time (idf is per-term, known to
+    the kernels from the lexicon join)."""
 
     def _groups_to_blocks(batches):
         """No carry/streaming logic needed: every group is complete in its
         row and bounded by chunk_span."""
-        for pdf in batches:
-            n_groups = len(pdf)
-            if not n_groups:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            dlists = pdf["docids"].to_numpy()
-            lens = np.fromiter((len(a) for a in dlists), dtype=np.int64,
-                               count=n_groups)
-            d = np.concatenate(dlists).astype(np.int64)
-            tfdl = np.concatenate(pdf["tfdls"].to_numpy()).astype(np.int64)
+            lens = pc.list_value_length(batch.column("docids")).to_numpy().astype(np.int64)
+            d = C.flat_values(batch.column("docids")).astype(np.int64)
+            tfdl = C.flat_values(batch.column("tfdls")).astype(np.int64)
             tf_, doclen = tfdl >> np.int64(32), tfdl & np.int64(0xFFFFFFFF)
             nb = (lens + block_size - 1) // block_size  # blocks per group
-            g_of_block = np.repeat(np.arange(n_groups, dtype=np.int64), nb)
+            g_of_block = np.repeat(np.arange(len(lens), dtype=np.int64), nb)
             blk_seq = np.arange(int(nb.sum()), dtype=np.int64) - np.repeat(
                 np.cumsum(nb) - nb, nb)
-            group_starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            seg_starts = group_starts[g_of_block] + blk_seq * block_size
-            seg_lengths = np.minimum(block_size,
-                                     lens[g_of_block] - blk_seq * block_size)
-            tid = pdf["term_id"].to_numpy(np.int64)[g_of_block]
-            bid = pdf["chunk"].to_numpy(np.int64)[g_of_block] * blocks_per_chunk + blk_seq
-            yield _pack_segments(tid, bid, seg_starts, seg_lengths,
-                                 d, tf_, doclen)
+            # blocks tile each group's postings in order
+            counts = np.minimum(block_size, lens[g_of_block] - blk_seq * block_size)
+            tid = batch.column("term_id").to_numpy()[g_of_block]
+            bid = batch.column("chunk").to_numpy()[g_of_block] * blocks_per_chunk + blk_seq
+            t = tf_.astype(np.float64)
+            scores = (k1 + 1.0) * t / (t + k1 * (1.0 - b + b * doclen / avgdl))
+            bmax = np.maximum.reduceat(scores, C.segment_starts(counts))
+            yield C.block_batch(tid, bid, d, tf_, doclen, counts, bmax)
 
     return _groups_to_blocks
 
 
 def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_span,
-                    num_partitions, encoding="varint", lex_pdf=None) -> dict:
+                    num_partitions, encoding=C.DEFAULT_ENCODING, lex_pdf=None) -> dict:
     """The invert: ONE map-side-combined aggregation shuffle, then vectorized
     block packing — with CHUNK-LOCAL blocks.
 
@@ -574,7 +551,7 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
                                                  deterministic salt -> Zipf-hot
                                                  terms spread across reducers;
                                                  groups bounded by chunk_span]
-      mapInPandas kernel                        [self-contained (term_id,
+      mapInArrow kernel                         [self-contained (term_id,
                                                  chunk, arrays) rows ->
                                                  128-posting blocks]
 
@@ -591,13 +568,13 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
     strictly increasing with docid per term.
 
     Kernel vectorization: all segments of an Arrow batch pack in a handful of
-    numpy passes (``reduceat`` maxima, segment varint encode); no per-posting
-    or per-block Python.
+    numpy passes (``reduceat`` maxima, list arrays built from offsets); no
+    per-posting or per-block Python, and no pandas conversion.
     """
     from ..operators.retrieve import shuffle_parts
 
     avgdl = stats["avg_doclen"]
-    codec = get_codec(encoding)
+    codec = C.get_codec(encoding)
     # reduce-side width of THE shuffle: the session's shuffle-partitions knob,
     # NOT defaultParallelism — (a) cluster-size-invariant task structure (the
     # same build at N and 4N executors runs identical tasks), (b) many more
@@ -651,12 +628,11 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
         .sortWithinPartitions("term_id", "chunk")
     )
 
-    _groups_to_blocks = make_block_packer(codec, block_size, blocks_per_chunk,
-                                          k1, b, avgdl)
+    _groups_to_blocks = make_block_packer(block_size, blocks_per_chunk, k1, b, avgdl)
 
     from pyspark.sql import Observation
 
-    out = grouped.mapInPandas(_groups_to_blocks, schema=POSTINGS_SCHEMA)
+    out = grouped.mapInArrow(_groups_to_blocks, schema=C.POSTINGS_SCHEMA)
     # NO re-partitioning before the write: the kernel's output is already
     # sorted by (term_id, block_id) within each (term_id, chunk)-hashed
     # partition (the invert's sortWithinPartitions order is preserved), so
@@ -665,13 +641,11 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
     # repartitionByRange here would add a range-sampling pass that EXECUTES
     # THE ENTIRE INVERT A SECOND TIME (the sampler's input is this pipeline)
     # for only marginally better file-level pruning.
-    # block/posting/byte counters ride the write job (Observation) instead of
-    # a full re-scan of the just-written binary columns
+    # block/posting counters ride the write job (Observation) instead of a
+    # re-scan of the just-written table
     obs = Observation("postings_stats")
     out = out.observe(obs, F.count(F.lit(1)).alias("blocks"),
-                      F.sum("count").alias("postings"),
-                      (F.sum(F.length("docids_delta")) + F.sum(F.length("tfs"))
-                       + F.sum(F.length("doclens"))).alias("bytes"))
+                      F.sum("count").alias("postings"))
     # Scoped session conf for the write: (a) the groupBy's reduce width comes
     # from the shuffle-partitions knob — honor an explicit num_partitions
     # override; (b) Arrow sizes batches in ROWS, and these rows carry up-to-
@@ -689,9 +663,7 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
         if str(saved[k_]) != v_:
             spark.conf.set(k_, v_)
     try:
-        out.write.mode("overwrite") \
-            .option("parquet.block.size", str(POSTINGS_PARQUET_BLOCK_BYTES)) \
-            .parquet(os.path.join(path, "postings"))
+        _write_postings(out, os.path.join(path, "postings"), codec)
     finally:
         for k_, v_ in overrides.items():
             if str(saved[k_]) != v_:
@@ -701,7 +673,19 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
                     spark.conf.set(k_, saved[k_])
     m = obs.get
     return {"blocks": int(m["blocks"] or 0), "postings": int(m["postings"] or 0),
-            "bytes": int(m["bytes"] or 0)}
+            "bytes": _dir_bytes(os.path.join(path, "postings"))}
+
+
+def _write_postings(blocks: DataFrame, out_dir: str, codec: "C.Codec") -> None:
+    """Write a postings table with the encoding's Parquet writer settings."""
+    blocks.write.mode("overwrite") \
+        .option("parquet.block.size", str(POSTINGS_PARQUET_BLOCK_BYTES)) \
+        .options(**codec.writer_options).parquet(out_dir)
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(root, f))
+               for root, _dirs, files in os.walk(path) for f in files)
 
 
 def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
@@ -717,8 +701,8 @@ def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
 
         impact(s) = max(1, ceil(s / global_max * (2^bits - 1)))
 
-    One mapInPandas pass over the packed blocks (decode tf/doclen -> partial
-    -> impact -> re-encode; embarrassingly parallel, no shuffle except the
+    One mapInArrow pass over the packed blocks (flatten tf/doclen -> partial
+    -> impact -> new tfs lists; embarrassingly parallel, no shuffle except the
     small term-stats agg). docmap/fwd/lexicon are NOT copied: the new meta
     records TABLE REFERENCES to the source index's parquet (tables, not
     files — a driver-side copy would bottleneck on driver bandwidth on an
@@ -731,7 +715,8 @@ def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
     b = meta["scorer"]["b"] if b is None else b
     partial = S.np_partial_fn(scorer, index.stats, k1, b, mu, c)
     stat_col = S.term_stat_col(scorer)
-    codec = get_codec(meta.get("encoding"))
+    if not 1 <= bits <= 31:
+        raise ValueError(f"bits must be in 1..31 (impacts are stored as int), got {bits}")
 
     # global max partial: driver-side over the vocab-sized term table when it
     # fits (zero Spark jobs; same max the agg would compute), else the agg
@@ -761,42 +746,38 @@ def quantize_index(index: "PersistedIndex", dst_path: str, scorer: str = "bm25",
     blocks = index.blocks.join(stats_map, "term_id")
 
     def _quantize(batches):
-        # segment-batched like the retrieval kernels' _decode_rows: ONE
-        # decode pass + ONE partial/impact computation over the whole Arrow
-        # batch's postings, then one encode_segments split back into blocks
-        # (no per-block Python decode/encode calls)
-        for pdf in batches:
-            if not len(pdf):
+        # one flatten + one partial/impact computation over the whole Arrow
+        # batch's postings; the other columns pass through untouched
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            counts = pdf["count"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-            t = codec.decode_segments(list(pdf["tfs"]), counts).astype(np.float64)
-            dl = codec.decode_segments(list(pdf["doclens"]), counts).astype(np.float64)
-            st = np.repeat(pdf["stat"].to_numpy(np.float64), counts)
-            p = partial(t, dl, st)
-            imp = np.maximum(1.0, np.ceil(p / gmax * levels)).astype(np.uint64)
-            res = pdf[["term_id", "block_id", "count", "docid_first", "docid_last",
-                       "docids_delta", "doclens"]].copy()
-            res["tfs"] = codec.encode_segments(imp, starts)
-            res["block_max_score"] = np.maximum.reduceat(imp, starts).astype(np.float64)
-            yield res[["term_id", "block_id", "count", "docid_first", "docid_last",
-                       "block_max_score", "docids_delta", "tfs", "doclens"]]
+            counts = batch.column("count").to_numpy().astype(np.int64)
+            t = C.flat_values(batch.column("tfs")).astype(np.float64)
+            dl = C.flat_values(batch.column("doclens")).astype(np.float64)
+            st = np.repeat(batch.column("stat").to_numpy().astype(np.float64), counts)
+            imp = np.maximum(1.0, np.ceil(partial(t, dl, st) / gmax * levels))
+            cols = {c: batch.column(c) for c in
+                    ("term_id", "block_id", "count", "docid_first", "docid_last")}
+            yield pa.RecordBatch.from_arrays([
+                *cols.values(),
+                pa.array(np.maximum.reduceat(imp, C.segment_starts(counts))),
+                batch.column("docids_delta"), C.list_array(imp, counts),
+                batch.column("doclens"),
+            ], names=[*cols, "block_max_score", *C.LIST_COLUMNS])
 
-    out = blocks.mapInPandas(_quantize, schema=POSTINGS_SCHEMA)
-    out.write.mode("overwrite") \
-        .option("parquet.block.size", str(POSTINGS_PARQUET_BLOCK_BYTES)) \
-        .parquet(os.path.join(dst_path, "postings"))
+    out = blocks.mapInArrow(_quantize, schema=C.POSTINGS_SCHEMA)
+    _write_postings(out, os.path.join(dst_path, "postings"),
+                    C.get_codec(meta.get("encoding")))
     # term max impacts: same driver-vs-distributed gate as the build's phase 4
     # (the input is two pruned columns of the block table — below ~20M blocks
     # one pyarrow read replaces a whole Spark agg job of fixed serial cost)
     nblocks = json.load(open(_marker(index.path, "postings"))).get("blocks", 1 << 62) \
         if _phase_done(index.path, "postings") else (1 << 62)
     if nblocks <= 20_000_000:
-        import pyarrow as pa
         import pyarrow.parquet as papq
 
-        blk = _read_parquet_pandas(os.path.join(dst_path, "postings"),
-                                   ["term_id", "block_max_score"])
+        blk = _read_arrow(os.path.join(dst_path, "postings"),
+                          ["term_id", "block_max_score"]).to_pandas()
         ts_pdf = blk.groupby("term_id", as_index=False)["block_max_score"].max() \
             .rename(columns={"block_max_score": "max_score"})
         tdir = os.path.join(dst_path, "term_stats")
@@ -870,28 +851,28 @@ def ensure_term_stats(index: "PersistedIndex", scorer: str, k1: float = 0.9,
             return cached
     stat_col = S.term_stat_col(scorer)
     partial = S.np_partial_fn(scorer, index.stats, k1, b, mu, c)
-    codec = get_codec(meta.get("encoding"))
     stats_map = F.broadcast(index.lexicon.select("term_id", F.col(stat_col).alias("stat")))
     blocks = index.blocks.select("term_id", "count", "tfs", "doclens").join(stats_map, "term_id")
 
     def _block_minmax(batches):
-        # segment-batched: one decode + one vectorized partial over the whole
-        # Arrow batch, per-block extrema via ufunc.reduceat
-        for pdf in batches:
-            if not len(pdf):
+        # one flatten + one vectorized partial over the whole Arrow batch,
+        # per-block extrema via ufunc.reduceat
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            counts = pdf["count"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-            t = codec.decode_segments(list(pdf["tfs"]), counts).astype(np.float64)
-            dl = codec.decode_segments(list(pdf["doclens"]), counts).astype(np.float64)
-            st = np.repeat(pdf["stat"].to_numpy(np.float64), counts)
+            counts = batch.column("count").to_numpy().astype(np.int64)
+            starts = C.segment_starts(counts)
+            t = C.flat_values(batch.column("tfs")).astype(np.float64)
+            dl = C.flat_values(batch.column("doclens")).astype(np.float64)
+            st = np.repeat(batch.column("stat").to_numpy().astype(np.float64), counts)
             p = partial(t, dl, st)
-            yield pd.DataFrame({"term_id": pdf["term_id"],
-                                "bmax": np.maximum.reduceat(p, starts),
-                                "bmin": np.minimum.reduceat(p, starts)})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("term_id"), pa.array(np.maximum.reduceat(p, starts)),
+                 pa.array(np.minimum.reduceat(p, starts))],
+                names=["term_id", "bmax", "bmin"])
 
-    per_block = blocks.mapInPandas(_block_minmax,
-                                   schema="term_id long, bmax double, bmin double")
+    per_block = blocks.mapInArrow(_block_minmax,
+                                  schema="term_id long, bmax double, bmin double")
     ts = per_block.groupBy("term_id").agg(F.max("bmax").alias("max_score"),
                                           F.min("bmin").alias("min_score"))
     ts.write.mode("overwrite").parquet(cache_dir)
@@ -907,10 +888,10 @@ def ensure_term_stats(index: "PersistedIndex", scorer: str, k1: float = 0.9,
 DRIVER_TERM_TABLE_MAX = B.SMALL_VOCAB_MAX
 
 
-def _read_parquet_pandas(path: str, columns: list[str] | None = None):
+def _read_arrow(path: str, columns: list[str]) -> "pa.Table":
     import pyarrow.dataset as pads
 
-    return pads.dataset(path).to_table(columns=columns).to_pandas()
+    return pads.dataset(path).to_table(columns=columns)
 
 
 def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
@@ -920,23 +901,22 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     term stats (computing/caching them via ``ensure_term_stats`` first if
     needed), cached per (index, scorer-params). Returns a dict of aligned
     numpy arrays {'index': pd.Index(term), 'term_id', 'stat', 'ms', 'mn'} or
-    None above ``DRIVER_TERM_TABLE_MAX`` (callers fall back to the Spark
+    None above ``DRIVER_TERM_TABLE_MAX`` and for derived views, whose tables
+    are not the parquet at ``index.path`` (callers fall back to the Spark
     broadcast-join path — same values, one job)."""
-    import pandas as _pd
-
     meta = index.meta
     nt = (index.stats or {}).get("num_terms")
-    if nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
+    if not index.pristine or nt is None or int(nt) > DRIVER_TERM_TABLE_MAX:
         return None
     key = (scorer, float(k1), float(b), float(mu), float(c))
     cache = index._driver_cache
     if key in cache:
         return cache[key]
-    lex_pdf = cache.get("_lexicon")
-    if lex_pdf is None:
-        lp = _table_path(index.path, meta, "lexicon")
-        lex_pdf = _read_parquet_pandas(lp, ["term", "term_id", "df", "cf"])
-        cache["_lexicon"] = lex_pdf
+    lex = cache.get("_lexicon")
+    if lex is None:
+        lex = _read_arrow(_table_path(index.path, meta, "lexicon"),
+                          ["term", "term_id", "df", "cf"])
+        cache["_lexicon"] = lex
     built = meta["scorer"].get("name", "bm25")
     fast = (scorer == "bm25" and built == "bm25"
             and k1 == meta["scorer"].get("k1") and b == meta["scorer"].get("b")) \
@@ -944,9 +924,8 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
     if fast:
         # bm25-at-build-params / quantized-on-quantized: the stored term_stats
         # ARE this scorer's maxima; partials provably non-negative -> mn = 0
-        ts_pdf = _read_parquet_pandas(os.path.join(index.path, "term_stats"),
-                                      ["term_id", "max_score"])
-        ts_pdf = ts_pdf.assign(min_score=0.0)
+        ts = _read_arrow(os.path.join(index.path, "term_stats"),
+                         ["term_id", "max_score"])
     else:
         import pyarrow.dataset as pads
 
@@ -959,15 +938,25 @@ def driver_term_table(index: "PersistedIndex", scorer: str, k1: float,
             # (exactly what the Spark path would do); subsequent loads here
             # are pure pyarrow reads
             ensure_term_stats(index, scorer, k1=k1, b=b, mu=mu, c=c)
-        ts_pdf = _read_parquet_pandas(cdir, ["term_id", "max_score", "min_score"])
-    m = lex_pdf.merge(ts_pdf, on="term_id", how="left")
-    stat_col = S.term_stat_col(scorer)
+        ts = _read_arrow(cdir, ["term_id", "max_score", "min_score"])
+    # term stats scatter into term_id-indexed arrays (0 where a term has
+    # none), then gather in lexicon row order: no join
+    tid = lex.column("term_id").to_numpy()
+    ts_tid = ts.column("term_id").to_numpy()
+    size = int(max(tid.max(initial=-1), ts_tid.max(initial=-1))) + 1
+
+    def _by_term(col: str) -> np.ndarray:
+        out = np.zeros(size, dtype=np.float64)
+        if col in ts.column_names:
+            out[ts_tid] = ts.column(col).to_numpy()
+        return out[tid]
+
     tbl = {
-        "index": _pd.Index(m["term"]),
-        "term_id": m["term_id"].to_numpy(np.int64),
-        "stat": m[stat_col].to_numpy(np.float64),
-        "ms": m["max_score"].fillna(0.0).to_numpy(np.float64),
-        "mn": m["min_score"].fillna(0.0).to_numpy(np.float64),
+        "index": pd.Index(lex.column("term").to_numpy(zero_copy_only=False)),
+        "term_id": tid.astype(np.int64),
+        "stat": lex.column(S.term_stat_col(scorer)).to_numpy().astype(np.float64),
+        "ms": _by_term("max_score"),
+        "mn": _by_term("min_score"),
     }
     cache[key] = tbl
     return tbl
@@ -993,32 +982,10 @@ class PersistedIndex:
 
     def flat_tf(self, blocks: DataFrame | None = None) -> DataFrame:
         """Decode blocks (all of them by default) back to (term_id, docid,
-        tf, doclen) — the oracle view (also backs the reference's
-        ``get_corpus_iter``, S5)."""
-        codec = get_codec(self.meta.get("encoding"))
-
-        from ..operators.codec import delta_decode_segments
-
-        def _decode(batches):
-            # one segment-batched decode per Arrow batch (same technique as
-            # the retrieval kernels' _decode_rows), not a per-block loop
-            for pdf in batches:
-                if not len(pdf):
-                    yield pd.DataFrame({"term_id": [], "docid": [], "tf": [], "doclen": []})
-                    continue
-                counts = pdf["count"].to_numpy(np.int64)
-                starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                gaps = codec.decode_segments(list(pdf["docids_delta"]), counts)
-                d = delta_decode_segments(gaps.astype(np.int64), starts)
-                t = codec.decode_segments(list(pdf["tfs"]), counts).astype(np.int64)
-                dl = codec.decode_segments(list(pdf["doclens"]), counts).astype(np.int64)
-                tid = np.repeat(pdf["term_id"].to_numpy(np.int64), counts)
-                yield pd.DataFrame({"term_id": tid, "docid": d, "tf": t, "doclen": dl})
-
-        blocks = self.blocks if blocks is None else blocks
-        return blocks.select("term_id", "count", "docids_delta", "tfs", "doclens").mapInPandas(
-            _decode, schema="term_id long, docid long, tf long, doclen long"
-        )
+        tf, doclen) in the JVM — the oracle view (also backs the reference's
+        ``get_corpus_iter``, S5). It shares no decoder with the kernels it
+        checks."""
+        return C.flat_postings(self.blocks if blocks is None else blocks)
 
     def num_docs(self) -> int:
         return int(self.stats["num_docs"])
@@ -1154,6 +1121,10 @@ def load_index(spark: SparkSession, path: str,
     from pyspark import StorageLevel
 
     meta = json.load(open(os.path.join(path, "meta.json")))
+    if meta.get("version") != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {path} has format version {meta.get('version')!r}; this "
+            f"engine reads version {FORMAT_VERSION}: rebuild with build_index")
     _verify_table_refs(path, meta)
     _p2.check_stemmer_backend(meta)  # warn on vendored-vs-PyStemmer mismatch
     lexicon = spark.read.parquet(_table_path(path, meta, "lexicon"))

@@ -1,5 +1,5 @@
 """Round-4 hardening: duplicate-docno gate, derived-index lifetime
-fingerprints, codec count contracts, driver-side query-frame guard, and the
+fingerprints, driver-side query-frame guard, and the
 last two reference-parity shims (DictTokeniser class, retriever
 from_dataset)."""
 
@@ -62,17 +62,6 @@ def test_quantized_index_detects_rebuilt_source(spark, tmp_path):
     os.remove(os.path.join(src, "meta.json"))
     with pytest.raises(ValueError, match="no longer exists"):
         load_index(spark, dst)
-
-
-def test_bitpack_decode_requires_count():
-    import numpy as np
-
-    from pyterrier_pisa_spark.operators.codec import bitpack_decode, bitpack_encode
-
-    buf = bitpack_encode(np.array([1, 2, 3], dtype=np.uint64))
-    with pytest.raises(ValueError, match="count is required"):
-        bitpack_decode(buf)
-    assert bitpack_decode(buf, 3).tolist() == [1, 2, 3]
 
 
 def test_query_frame_guard(spark, monkeypatch):

@@ -7,20 +7,29 @@
 - rebuilt in place in one session: the engines must not read the earlier
   index's persisted lexicon;
 - re-quantized into a dir that already holds ``term_stats`` parts: only the
-  new part remains.
+  new part remains;
+- serving refuses what it cannot answer: sparse docids, an index over its
+  decoded-postings budget, an index of another format version; and the
+  driver-side term table is never read for a derived view.
 """
 
 import glob
+import json
 import os
+from dataclasses import replace
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
+from pyterrier_pisa_spark.operators.serve import LocalSearcher, ShardedLocalSearcher
 from pyterrier_pisa_spark.operators.wand import (retrieve_blockmax,
                                                  retrieve_blockmax_batch)
 from pyterrier_pisa_spark.plans.pipeline import retrieve
 from pyterrier_pisa_spark.sources.corpus import synth_code_corpus
-from pyterrier_pisa_spark.sources.index_store import (build_index, load_index,
-                                                      quantize_index)
+from pyterrier_pisa_spark.sources.index_store import (FORMAT_VERSION, build_index,
+                                                      driver_term_table,
+                                                      load_index, quantize_index)
 from pyterrier_pisa_spark.streaming.ingest import (compact_stream_index,
                                                    stream_index_shards)
 
@@ -40,8 +49,11 @@ def _docs(n: int, common: str):
             for i in range(n)]
 
 
-def test_streamed_index_topk_rows(spark, tmp_path):
-    src, path = str(tmp_path / "src"), str(tmp_path / "idx")
+@pytest.fixture(scope="module")
+def streamed(spark, tmp_path_factory):
+    """A 60-doc streamed index (hashed docids): (meta, loaded index)."""
+    tmp = tmp_path_factory.mktemp("streamed")
+    src, path = str(tmp / "src"), str(tmp / "idx")
     schema = "docno string, content string"
     spark.createDataFrame(_docs(60, "zeta"), schema=schema).coalesce(1) \
         .write.mode("append").parquet(src)
@@ -50,7 +62,19 @@ def test_streamed_index_topk_rows(spark, tmp_path):
     q1.awaitTermination(120)
     q2.awaitTermination(120)
     meta = compact_stream_index(spark, path, stemmer="none")
-    idx = load_index(spark, path)
+    return meta, load_index(spark, path)
+
+
+@pytest.fixture(scope="module")
+def batch_idx(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("batch") / "idx")
+    build_index(synth_code_corpus(spark, num_docs=120, seed=8), path,
+                stemmer="porter2", block_size=16, mode="overwrite")
+    return load_index(spark, path)
+
+
+def test_streamed_index_topk_rows(spark, streamed):
+    meta, idx = streamed
     assert idx.stats["num_docs"] == 60
     # hashed ids: the stamp must show docids far beyond one chunk
     assert meta["max_docid"] >= meta["chunk_span"]
@@ -123,3 +147,70 @@ def test_requantize_clears_stale_term_stats(spark, tmp_path):
                              scorer="quantized", include_query=False).toPandas()
     assert len(want) > 0
     pd.testing.assert_frame_equal(_frame(got), _frame(want))
+
+
+def test_serving_refuses_sparse_docids(spark, streamed):
+    """Serving arrays are docid-indexed: a streamed index (hashed ids) fails
+    loudly instead of answering 0 rows (sharded) or an IndexError."""
+    _meta, idx = streamed
+    for make in (lambda: LocalSearcher(idx),
+                 lambda: LocalSearcher(idx, mode="blockmax"),
+                 lambda: ShardedLocalSearcher(idx, n_shards=2)):
+        with pytest.raises(ValueError, match="dense docids"):
+            make()
+
+
+def test_quantize_carries_dense_stamp(spark, batch_idx, tmp_path):
+    meta = quantize_index(batch_idx, str(tmp_path / "q"))
+    assert meta["max_docid"] == batch_idx.meta["max_docid"] == 119
+    assert meta["num_postings"] == batch_idx.meta["num_postings"]
+    qidx = load_index(spark, str(tmp_path / "q"))
+    got = LocalSearcher(qidx, scorer="quantized").search([("q1", "parse index")], k=5)
+    want = retrieve_blockmax(qidx, [("q1", "parse index")], k=5, scorer="quantized",
+                             include_query=False).toPandas()
+    assert len(want) == 5
+    assert got["docid"].tolist() == want.sort_values("rank")["docid"].tolist()
+
+
+def test_serving_budget_counts_decoded_postings(spark, batch_idx):
+    """The budget is 12 B per decoded posting, from the build's count on the
+    pristine path and from the view's own blocks on the Spark path."""
+    nposts = batch_idx.meta["num_postings"]
+    assert nposts == batch_idx.blocks.agg(F.sum("count")).collect()[0][0]
+    budget = 12 * nposts
+    LocalSearcher(batch_idx, mode="blockmax", max_bytes=budget)
+    with pytest.raises(MemoryError, match="serving budget"):
+        LocalSearcher(batch_idx, mode="blockmax", max_bytes=budget - 1)
+    with pytest.raises(MemoryError, match="serving budget"):
+        ShardedLocalSearcher(batch_idx, n_shards=1, mode="blockmax",
+                             max_bytes=budget - 1)
+
+
+def test_load_refuses_other_format_version(spark, batch_idx, tmp_path):
+    import shutil
+
+    path = str(tmp_path / "old")
+    shutil.copytree(batch_idx.path, path)
+    with open(os.path.join(path, "meta.json")) as fh:
+        meta = json.load(fh)
+    meta["version"] = FORMAT_VERSION - 1
+    with open(os.path.join(path, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError) as err:
+        load_index(spark, path)
+    msg = str(err.value)
+    assert f"version {FORMAT_VERSION - 1}" in msg and f"version {FORMAT_VERSION}" in msg
+    assert "rebuild with build_index" in msg
+
+
+def test_driver_term_table_skips_derived_views(spark, batch_idx):
+    """A view's lexicon is not the parquet at ``index.path``: the engines
+    must resolve its query terms through the view's own tables."""
+    term = "pars"  # porter2 stem of "parse"
+    view = replace(batch_idx, lexicon=batch_idx.lexicon.filter(F.col("term") != term),
+                   pristine=False, _driver_cache={})
+    assert driver_term_table(view, "bm25", 0.9, 0.4, 1000.0, 1.0) is None
+    queries = [("q1", "parse")]
+    assert retrieve_blockmax(batch_idx, queries, k=5, include_query=False).count() == 5
+    for engine in (retrieve_blockmax, retrieve_blockmax_batch):
+        assert engine(view, queries, k=5, include_query=False).count() == 0

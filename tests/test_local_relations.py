@@ -137,10 +137,16 @@ def _same(a: pd.DataFrame, b: pd.DataFrame):
 
 
 def _decode_restricted(df) -> bool:
-    """The decode reads the blocks semi-joined with the query's term ids."""
+    """The decode (a JVM explode of the posting lists) reads the blocks
+    semi-joined with the query's term ids."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return bool(re.search(r"MapInPandas _decode\(.*\n[ :]*\+- BroadcastHashJoin "
+    return bool(re.search(r"Generate explode\(arrays_zip\(.*\n[ :]*\+- BroadcastHashJoin "
                           r"\[term_id#\d+L\], \[term_id#\d+L\], LeftSemi", plan))
+
+
+def _python_stages(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"MapIn\w+|\w*EvalPython\w*|FlatMap\w*InPandas", plan)
 
 
 @pytest.mark.parametrize("mode", ["ranked_or", "ranked_and"])
@@ -150,6 +156,7 @@ def test_exhaustive_decodes_only_query_blocks(spark, multi_chunk, mode):
     idx._driver_cache.clear()
     res = retrieve(logical, QUERIES, k=20, mode=mode, include_query=False)
     assert _decode_restricted(res), res._jdf.queryExecution().executedPlan().toString()
+    assert _python_stages(res) == []  # the exhaustive plan runs no Python
     _assert_local(res)
     full = retrieve(_full_decode(logical), QUERIES, k=20, mode=mode,
                     include_query=False)

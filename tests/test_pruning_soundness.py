@@ -25,39 +25,28 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyterrier_pisa_spark.operators.codec import decode_frame
 from pyterrier_pisa_spark.operators.wand import _taat_score
 
 
 def _block(block_id, docids, tfs, bmax):
-    """One packed block row; fake codec: buffers ARE numpy arrays."""
+    """One block row in the postings layout; float tfs carry the partials."""
     docids = np.asarray(docids, dtype=np.int64)
-    deltas = np.diff(docids, prepend=0)
     return {
         "block_id": block_id,
         "count": len(docids),
         "docid_first": int(docids[0]),
         "docid_last": int(docids[-1]),
         "block_max_score": float(bmax),
-        "docids_delta": deltas,
+        "docids_delta": docids - docids[0],
         "tfs": np.asarray(tfs, dtype=np.float64),
         "doclens": np.zeros(len(docids), dtype=np.float64),
     }
 
 
-def _fake_codec():
-    """Codec stand-in whose 'buffers' are plain numpy arrays."""
-    from pyterrier_pisa_spark.operators.codec import _generic_decode_segments
-
-    decode = lambda buf, cnt: np.asarray(buf, dtype=np.float64)  # noqa: E731
-    from types import SimpleNamespace
-
-    return SimpleNamespace(decode=decode,
-                           decode_segments=_generic_decode_segments(decode))
-
-
 def _run(terms, by_term, k=1, use_block_max=True):
     partial = lambda tf, dl, st: tf - 10.0  # partial encoded as tf-10  # noqa: E731
-    return _taat_score(terms, by_term, partial, _fake_codec(), k,
+    return _taat_score(terms, by_term, partial, decode_frame, k,
                        conjunctive=False, use_block_max=use_block_max)
 
 
@@ -121,7 +110,7 @@ def test_batch_kernel_partial_trailing_term_block():
                     (2, 1.0, 0.0, 2.0, 1.0, 0.0),
                     (3, 1.0, 0.0, 1.0, 1.0, 0.0)]}
     partial = lambda tf, dl, st: tf  # noqa: E731
-    kernel = make_batch_kernel(qinfo, partial, _fake_codec(), k=10, chunk_span=100,
+    kernel = make_batch_kernel(qinfo, partial, k=10, chunk_span=100,
                                dense_cells=1)
     rows = []
     for tid, docids, tfs in [(1, [1, 2], [1.0, 2.0]),

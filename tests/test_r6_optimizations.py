@@ -61,12 +61,12 @@ def test_driver_term_table_matches_spark_join(spark, one_chunk_idx, monkeypatch,
     qweight, stat, max_score, block_scale, min_score per term) as the Spark
     broadcast-join path it replaces."""
     args = (one_chunk_idx, QUERIES, None, None, 1000.0, 1.0, scorer, "terrier")
-    _sp, qinfo_fast, _p, _c, ubm_fast = _query_plan_inputs(*args)
+    _sp, qinfo_fast, _p, ubm_fast = _query_plan_inputs(*args)
     assert one_chunk_idx._driver_cache, "driver table should have been used"
     # force the Spark fallback by dropping the gate to zero
     one_chunk_idx._driver_cache.clear()
     monkeypatch.setattr(index_store, "DRIVER_TERM_TABLE_MAX", 0)
-    _sp, qinfo_slow, _p, _c, ubm_slow = _query_plan_inputs(*args)
+    _sp, qinfo_slow, _p, ubm_slow = _query_plan_inputs(*args)
     assert not one_chunk_idx._driver_cache
     assert ubm_fast == ubm_slow
     assert _qinfo_map(qinfo_fast) == _qinfo_map(qinfo_slow)
