@@ -7,7 +7,7 @@ This file exists so OPTIMIZATION_r06.md numbers are reproducible:
   python bench_extra.py build      # per-phase build timings (documents + synth)
   python bench_extra.py queries    # noop-sink wall time per declared query
   python bench_extra.py plans DIR  # write .explain("formatted") per query to DIR
-  python bench_extra.py kernels    # isolated pruned/batch kernel timings
+  python bench_extra.py kernels    # isolated pruned-kernel timings
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS (32).
 """
@@ -99,14 +99,14 @@ def cmd_build():
 
 def cmd_kernels():
     """Isolated query-path timings over a persisted sf index: per-step
-    breakdown of retrieve_blockmax/_batch (plan-inputs collect vs kernel job)."""
+    breakdown of retrieve_blockmax (plan inputs vs kernel job); its batch
+    name runs the same plan, so it is timed once."""
     import itertools
 
     from pyspark.sql import functions as F
 
     from pyterrier_pisa_spark.operators.wand import (_query_plan_inputs,
-                                                     retrieve_blockmax,
-                                                     retrieve_blockmax_batch)
+                                                     retrieve_blockmax)
     from pyterrier_pisa_spark.sources.index_store import build_index, load_index
 
     spark = get_spark()
@@ -122,7 +122,6 @@ def cmd_kernels():
         queries.append((f"b{i}", f"{a} {b}"))
     # warm
     retrieve_blockmax(idx, queries[:2], k=100, include_query=False).count()
-    retrieve_blockmax_batch(idx, queries[:2], k=100, include_query=False).count()
     for rep in range(3):
         t0 = time.time()
         _query_plan_inputs(idx, queries, None, None, 1000.0, 1.0, "bm25", "terrier")
@@ -130,10 +129,7 @@ def cmd_kernels():
         t0 = time.time()
         retrieve_blockmax(idx, queries, k=1000, include_query=False).count()
         t_bm = time.time() - t0
-        t0 = time.time()
-        retrieve_blockmax_batch(idx, queries, k=1000, include_query=False).count()
-        t_bb = time.time() - t0
-        print(f"rep{rep}: plan_inputs={t_plan:.3f} blockmax={t_bm:.3f} batch={t_bb:.3f}")
+        print(f"rep{rep}: plan_inputs={t_plan:.3f} blockmax={t_bm:.3f}")
     import shutil
 
     shutil.rmtree(tmp, ignore_errors=True)

@@ -5,10 +5,11 @@ subcommands; TREC run output lines ``qid 0 docno rank score tag``,
     python -m pyterrier_pisa_spark index  <index_dir> --input corpus.parquet \
         [--stemmer porter2] [--pretokenized] [--id-col doc_id] [--mode overwrite]
     python -m pyterrier_pisa_spark retrieve <index_dir> --queries topics.tsv \
-        [--k 1000] [--algorithm block_max_wand|ranked_or|ranked_and] [--trec]
+        [--k 1000] [--algorithm block_max_wand] [--trec]
     python -m pyterrier_pisa_spark stats <index_dir>
 
-Topics file: TSV ``qid<TAB>query`` (one per line).
+Topics file: TSV ``qid<TAB>query`` (one per line). ``--algorithm`` takes
+any ``PisaQueryAlgorithm`` value.
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ def cmd_index(args) -> int:
 
 def cmd_retrieve(args) -> int:
     from .operators.wand import retrieve_blockmax
+    from .plans.api import PRUNED_ALGORITHMS
     from .plans.pipeline import retrieve
     from .sources.index_store import load_index
 
@@ -69,19 +71,12 @@ def cmd_retrieve(args) -> int:
                 continue
             qid, _, qtext = line.partition("\t")
             queries.append((qid, qtext))
-    if args.algorithm in ("block_max_wand", "maxscore", "wand"):
+    if args.algorithm in PRUNED_ALGORITHMS:
         res = retrieve_blockmax(idx, queries, k=args.k, stopwords=args.stopwords,
                                 include_query=False)
-    elif args.algorithm == "batch":
-        from .operators.wand import retrieve_blockmax_batch
-
-        res = retrieve_blockmax_batch(idx, queries, k=args.k, stopwords=args.stopwords,
-                                      include_query=False)
-    elif args.algorithm in ("ranked_or", "ranked_and"):
+    else:  # argparse allows only the exhaustive names besides
         res = retrieve(idx.as_logical(), queries, k=args.k, stopwords=args.stopwords,
                        mode=args.algorithm, include_query=False)
-    else:
-        raise SystemExit(f"unknown algorithm {args.algorithm}")
     rows = res.orderBy("qid", "rank").collect()
     out = sys.stdout
     for r in rows:
@@ -102,7 +97,9 @@ def cmd_stats(args) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def parser() -> argparse.ArgumentParser:
+    from .plans.api import EXHAUSTIVE_ALGORITHMS, PRUNED_ALGORITHMS
+
     ap = argparse.ArgumentParser(prog="pyterrier_pisa_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -128,8 +125,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--queries", required=True, help="TSV qid<TAB>query")
     p.add_argument("--k", type=int, default=1000)
     p.add_argument("--algorithm", default="block_max_wand",
-                   choices=["block_max_wand", "maxscore", "wand", "batch",
-                            "ranked_or", "ranked_and"])
+                   choices=[*PRUNED_ALGORITHMS, *EXHAUSTIVE_ALGORITHMS])
     p.add_argument("--stopwords", default="terrier",
                    help="query-time stop list: terrier (reference default), lucene, none")
     p.add_argument("--trec", action="store_true", help="TREC run output format")
@@ -139,8 +135,11 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("stats", help="print index metadata")
     p.add_argument("index_dir")
     p.set_defaults(fn=cmd_stats)
+    return ap
 
-    args = ap.parse_args(argv)
+
+def main(argv: list[str] | None = None) -> int:
+    args = parser().parse_args(argv)
     return args.fn(args)
 
 

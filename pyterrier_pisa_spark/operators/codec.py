@@ -1,7 +1,7 @@
 """Posting-block layout: Parquet integer lists, packed and flattened here.
 
 This is the one module that packs postings into blocks and flattens blocks
-back into postings; every consumer (the build's pack UDF, the kernels,
+back into postings; every consumer (the build's pack UDF, the kernel,
 ``quantize_index``, ``ensure_term_stats``, ``LocalSearcher`` and the
 exhaustive plan) goes through it. A postings row is one block of at most
 ``block_size`` postings of one term, docids strictly ascending:
@@ -116,22 +116,6 @@ def decode_arrow(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray
             flat_values(blocks.column("doclens")), counts)
 
 
-def _concat(cells) -> np.ndarray:
-    arrs = cells.to_numpy() if hasattr(cells, "to_numpy") else cells
-    return np.concatenate(arrs) if len(arrs) else np.empty(0, dtype=np.int32)
-
-
-def decode_frame(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Postings rows as a pandas frame (the kernels' ``applyInPandas``
-    input: one ndarray per list cell) -> float64-ready (docids, tfs,
-    doclens), concatenated in row order."""
-    counts = rows["count"].to_numpy(np.int64)
-    d = decode_docids(rows["docid_first"].to_numpy(np.int64),
-                      _concat(rows["docids_delta"]), counts)
-    return (d, _concat(rows["tfs"]).astype(np.float64),
-            _concat(rows["doclens"]).astype(np.float64))
-
-
 def flat_postings(blocks):
     """Blocks -> (term_id, docid, tf, doclen) rows, decoded in the JVM:
     ``explode(arrays_zip(transform(docids_delta, x -> docid_first + x),
@@ -157,7 +141,7 @@ class Codec:
 
     @staticmethod
     def decode_segments(cells, counts) -> np.ndarray:
-        vals = _concat(cells)
+        vals = np.concatenate(cells) if len(cells) else np.empty(0, dtype=np.int32)
         if vals.size != int(np.sum(counts)):
             raise ValueError(f"decode_segments: expected {int(np.sum(counts))} "
                              f"values, got {vals.size}")

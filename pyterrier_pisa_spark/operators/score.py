@@ -131,7 +131,7 @@ def term_stat_col(scorer: str) -> str:
 def np_partial_fn(scorer: str, stats: dict, k1: float = 0.9, b: float = 0.4,
                   mu: float = 1000.0, c: float = 1.0):
     """Vectorized per-posting partial scorer ``f(tf, doclen, term_stat) ->
-    partials`` for the pruned/batch kernels — the SAME arithmetic as the
+    partials`` for the pruned kernel and LocalSearcher — the SAME arithmetic as the
     Column path (``attach_scores``), per the reference contract that every
     scorer runs under every retrieval algorithm (``tests/test_variants.py:
     7-28``, scorer wiring ``_pisathon.cpp:222-240``)."""

@@ -11,19 +11,19 @@ reference never pays it because serving is in-process. ``LocalSearcher`` is
 the in-process twin: collect the (small-enough) index to the driver ONCE,
 then answer queries with zero Spark jobs.
 
-Two engines, both rank- AND score-identical to the Spark kernels:
+Two engines, both rank- AND score-identical to the Spark kernel:
 
 ``mode='dense'`` (default) — postings are decoded ONCE at construction and
 the scorer's per-posting partial is PRE-COMPUTED per posting (the searcher is
-scorer-bound, partials are query-independent — the same observation the batch
-kernel exploits, ``wand.make_batch_kernel``). A query is then one vectorized
+scorer-bound, partials are query-independent). A query is then one vectorized
 ``acc[docids] += qw * partials`` pass per term (docids are unique within a
 term, so a plain fancy-indexed add is exact) followed by an exact
 float32-granularity top-k. Float64 sums accumulate in the SAME term-major
-order as the kernels' ``_merge_acc``, so scores are bit-identical.
+order as the kernel's ``_merge_acc``, so scores are bit-identical.
 
-``mode='blockmax'`` — runs the Spark paths' own pruned ``_taat_score`` kernel
-over the block table (each block gathered from the flat postings on demand).
+``mode='blockmax'`` — runs the Spark kernel's own pruned ``_taat_score`` over
+one ``wand.TaskBlocks`` of the whole index (the helper each Spark task builds
+over its candidate blocks).
 Slower per query but holds no per-posting partials; useful to cross-check
 the dense engine and when memory is tight.
 
@@ -53,7 +53,7 @@ from ..functions.stopwords import DEFAULT_STOPWORDS, get_stopwords
 from ..functions.tokenizer import tokenize_queries
 from . import codec as C
 from . import score as S
-from .wand import _taat_score
+from .wand import TaskBlocks, _taat_score, _topk_select
 
 _BLOCK_COLS = ["term_id", "block_id", "count", "docid_first", "docid_last",
                "block_max_score", *C.LIST_COLUMNS]
@@ -72,34 +72,6 @@ def _require_dense(index) -> None:
             "(retrieve_blockmax) or rebuild with build_index")
 
 
-def _topk_select(docids: np.ndarray, scores: np.ndarray,
-                 k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Exact (float32(score) DESC, docid ASC) top-k without a full lexsort:
-    partition on the ranking key bounds the candidate set (keeping ALL
-    boundary ties), then the small subset lexsorts. Identical ordering to
-    the kernels' ``_topk_frame``. Integer score arrays (the quantized int
-    fast path) rank directly — the caller guarantees values < 2^24, where
-    float32 represents every integer exactly, so integer order IS the
-    engine-wide float32-granularity order.
-
-    Candidates MUST arrive in ascending docid order (the dense engine's
-    ``flatnonzero`` and the TAAT merge both guarantee it) — boundary ties
-    then resolve by taking the FIRST ``k - above`` tied positions (smallest
-    docids), so the final lexsort runs over exactly k rows, never over the
-    (potentially huge — coarse integer scores) tie group."""
-    key = scores if scores.dtype.kind in "iu" else scores.astype(np.float32)
-    n = docids.size
-    if n > k:
-        thresh = np.partition(key, n - k)[n - k]
-        above = np.flatnonzero(key > thresh)  # all of these are in the top-k
-        tied = np.flatnonzero(key == thresh)[: k - above.size]
-        sel = np.sort(np.concatenate((above, tied)))
-        docids, scores, key = docids[sel], scores[sel], key[sel]
-    kk = min(k, docids.size)
-    order = np.lexsort((docids, -key))[:kk]
-    return docids[order], scores[order]
-
-
 class ShardedLocalSearcher:
     """Docid-range-sharded serving fleet — the serving tier's scale path: N
     ``LocalSearcher`` replicas over chunk-aligned docid slices of ONE index
@@ -110,21 +82,14 @@ class ShardedLocalSearcher:
     contract, and shard boundaries align to chunks). Per-shard top-ks merge
     under the same (float32(score) DESC, docid ASC) order, so results are
     EXACT: a global top-k doc is necessarily in its shard's local top-k.
+    Each shard's term maxima are its own (a view never writes the index's
+    term-stats cache): sound bounds for the shard's own blocks.
     """
 
     def __init__(self, index, n_shards: int = 2, scorer: str = "bm25", **kw):
         import math
         from dataclasses import replace
 
-        from ..sources.index_store import ensure_term_stats
-
-        # pre-warm GLOBAL term stats so every shard prunes with collection-
-        # wide (sound) bounds — a shard-local cache write would poison the
-        # shared cache directory with underestimates for the other shards
-        ensure_term_stats(index, scorer,
-                          k1=kw.get("k1") or index.meta["scorer"].get("k1", 0.9),
-                          b=kw.get("b") or index.meta["scorer"].get("b", 0.4),
-                          mu=kw.get("mu", 1000.0), c=kw.get("c", 1.0))
         span = int(index.meta.get("chunk_span", 1 << 16))
         nd = int(index.stats["num_docs"])
         chunks = max(1, math.ceil(nd / span))
@@ -252,38 +217,41 @@ class LocalSearcher:
             lex = [t.column(c).to_numpy() for c in ("term_id", "stat", "ms", "mn")]
         self._terms = dict(zip(terms, zip(*(a.tolist() for a in lex))))
 
-        # ---- postings, flattened once and ordered by (term_id, block_id) so
-        # each term is one contiguous slice
         if arrow_tbl is not None:
             blk = _read_arrow(postings_dir, _BLOCK_COLS)
         else:
             blk = index.blocks.select(*_BLOCK_COLS).toArrow()
-        d_all, tf_all, dl_all, counts = C.decode_arrow(blk)
-        tid_b = blk.column("term_id").to_numpy()
-        order = np.lexsort((blk.column("block_id").to_numpy(), tid_b))
-        post = C.gather_index(C.segment_starts(counts)[order], counts[order])
-        d_all, tf_all, dl_all = d_all[post], tf_all[post], dl_all[post]
-        counts, tid_b = counts[order], tid_b[order]
-        # the scorer's per-term statistic, looked up by term_id
-        stat_of = np.zeros(int(max(lex[0].max(initial=-1), tid_b.max(initial=-1))) + 1)
-        stat_of[lex[0]] = lex[1]
         partial = S.np_partial_fn(scorer, self.stats, self.k1, self.b, mu, c)
+        self._all_pos = False
+        self._dvecs: dict[int, np.ndarray] = {}
+        self._accD = None
+        self._index_blocks = None
+        self._post_d = self._post_p = self._post_tid_sorted = None
 
         if mode == "dense":
+            # ---- postings, flattened once and ordered by (term_id, block_id)
+            # so each term is one contiguous slice
+            d_all, tf_all, dl_all, counts = C.decode_arrow(blk)
+            tid_b = blk.column("term_id").to_numpy()
+            order = np.lexsort((blk.column("block_id").to_numpy(), tid_b))
+            post = C.gather_index(C.segment_starts(counts)[order], counts[order])
+            d_all, tf_all, dl_all = d_all[post], tf_all[post], dl_all[post]
+            counts, tid_b = counts[order], tid_b[order]
+            # the scorer's per-term statistic, looked up by term_id
+            stat_of = np.zeros(int(max(lex[0].max(initial=-1), tid_b.max(initial=-1))) + 1)
+            stat_of[lex[0]] = lex[1]
             nposts = int(counts.sum())
             if 16 * nposts > max_bytes:
                 raise MemoryError(
                     f"~{16*nposts/2**30:.1f} GiB decoded exceeds the local-"
                     f"serving budget; use mode='blockmax' or shard replicas")
             # pre-computed per-posting partial (float64 — per-query sums must
-            # be bit-identical to the kernels')
+            # be bit-identical to the kernel's)
             p_all = partial(tf_all.astype(np.float64), dl_all.astype(np.float64),
                             np.repeat(stat_of[tid_b], counts))
             self._post_d = d_all
             self._post_p = np.ascontiguousarray(p_all, dtype=np.float64)
             self._post_tid_sorted = np.repeat(tid_b, counts)  # ascending
-            self._blocks = None
-            self._tid_sorted = None
             # dense accumulators, reused across queries (reset touched-only)
             nd = int(self.stats["num_docs"])
             self._acc = np.zeros(nd, dtype=np.float64)
@@ -291,7 +259,7 @@ class LocalSearcher:
             self._mask = np.zeros(nd, dtype=bool)
             # INTEGER fast path for quantized (impact) indexes: partials are
             # exact small ints, so an int32 scatter-add is both exact (equal
-            # to the kernels' float64 integer sums — no rounding anywhere)
+            # to the kernel's float64 integer sums — no rounding anywhere)
             # and ~35% faster than the float64 accumulate (narrower traffic
             # on the random-access hot loop). Guarded per query against
             # int32 overflow via the per-term max impacts.
@@ -318,28 +286,15 @@ class LocalSearcher:
             # C++ serving band. Exactness: int32 sums are order-free; float64
             # vectors accumulate in the same term-major order as the scatter
             # path and absent docs contribute +0.0 (an exact identity), so
-            # scores stay bit-identical to the Spark kernels. Only strictly-
+            # scores stay bit-identical to the Spark kernel. Only strictly-
             # positive-partial scorers qualify (candidates come from
             # flatnonzero of the dense accumulator). Budgeted separately from
             # the postings (default 256 MB ≈ 160 cached terms at 200k docs —
             # far past the Zipf head that serves hot traffic).
-            self._dvecs: dict[int, np.ndarray] = {}
-            self._accD = None
             if self._all_pos and dense_cache_bytes > 0:
                 self._build_dense_cache(dense_cache_bytes, nd)
         else:
-            # block metadata only; _decode_block gathers a frame's postings
-            cols = ("block_id", "docid_first", "docid_last", "block_max_score")
-            self._blocks = pd.DataFrame({
-                "term_id": tid_b, "count": counts,
-                "start": C.segment_starts(counts),
-                **{c: blk.column(c).to_numpy()[order] for c in cols}})
-            self._flat = (d_all, tf_all.astype(np.float64), dl_all.astype(np.float64))
-            self._tid_sorted = tid_b
-            self._post_d = self._post_p = self._post_tid_sorted = None
-            self._all_pos = False
-            self._dvecs = {}
-            self._accD = None
+            self._index_blocks = TaskBlocks(blk)
 
         # ---- docid (dense 0..n-1) -> docno as a direct-indexed array
         # (scatter by docid — input order is irrelevant, so the fast path
@@ -440,9 +395,9 @@ class LocalSearcher:
 
     def _query_dense(self, terms: list, k: int, conjunctive: bool):
         """Exhaustive dense TAAT over pre-scored postings — exact, and the
-        same float64 accumulation order as the kernels (term-major). On
+        same float64 accumulation order as the kernel (term-major). On
         quantized indexes with integer query weights the accumulate runs in
-        int32 (exact: integer sums, no rounding — identical to the kernels'
+        int32 (exact: integer sums, no rounding — identical to the kernel's
         float64 integer arithmetic) when the per-query upper bound
         ``sum(qw * term_max_impact)`` provably fits."""
         bound = sum(qw * ms for (_t, qw, _s, ms, *_r) in terms)
@@ -502,22 +457,6 @@ class LocalSearcher:
             cand, sc = cand[ok], sc[ok]
         return cand, sc
 
-    def _query_blockmax(self, terms: list, k: int, conjunctive: bool):
-        by_term = {}
-        for (tid, *_rest) in terms:
-            lo = np.searchsorted(self._tid_sorted, tid, "left")
-            hi = np.searchsorted(self._tid_sorted, tid, "right")
-            if hi > lo:
-                by_term[tid] = self._blocks.iloc[lo:hi]
-        if not by_term:
-            return None, None
-        return _taat_score(terms, by_term, self._partial, self._decode_block, k,
-                           conjunctive, self._use_block_max)
-
-    def _decode_block(self, frame: pd.DataFrame):
-        post = C.gather_index(frame["start"].to_numpy(), frame["count"].to_numpy())
-        return tuple(a[post] for a in self._flat)
-
     def _run(self, qinfo: dict, k: int, conjunctive: bool,
              cast_float32: bool) -> pd.DataFrame:
         # numpy end-to-end: per-query (docid, score) selections concatenate
@@ -530,7 +469,8 @@ class LocalSearcher:
             if self.mode == "dense":
                 acc_d, acc_s = self._query_dense(terms, k, conjunctive)
             else:
-                acc_d, acc_s = self._query_blockmax(terms, k, conjunctive)
+                acc_d, acc_s = _taat_score(terms, self._index_blocks, self._partial,
+                                           k, conjunctive, self._use_block_max)
             if acc_d is not None and acc_d.size:
                 parts.append((qid, *_topk_select(acc_d, acc_s, k)))
         sdtype = np.float32 if cast_float32 else np.float64

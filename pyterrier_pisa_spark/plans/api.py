@@ -11,10 +11,10 @@ pandas.
     res = idx.dph().transform(queries_df)     # any scorer
     fast = idx.bm25(precompute_impact=True)   # quantized impacts (B9)
 
-Every retriever runs on the persisted block index through the pruned or
-batch kernels (``query_algorithm=`` 'block_max_wand' (default) / 'maxscore'
-/ 'wand' -> per-query kernel; 'batch' -> docid-partitioned batch kernel;
-'ranked_or' / 'ranked_and' -> exhaustive DataFrame plans).
+Every retriever runs on the persisted block index: ``query_algorithm=``
+'block_max_wand' (default), 'block_max_maxscore', 'maxscore', 'wand' and
+'batch' all run the one pruned kernel (``operators.wand.retrieve_blockmax``);
+'ranked_or' / 'ranked_and' run the exhaustive DataFrame plans.
 """
 
 from __future__ import annotations
@@ -64,8 +64,8 @@ class PisaIndexEncoding(Enum):
 
 class PisaQueryAlgorithm(Enum):
     """Reference ``PisaQueryAlgorithm`` (``__init__.py:93-105``) plus this
-    engine's batch mode. wand/maxscore/block_max_maxscore map onto the pruned
-    per-query kernel (same exact-pruning core); ranked_or/ranked_and are the
+    engine's batch name. Every name in ``PRUNED_ALGORITHMS`` runs the one
+    pruned kernel (same exact-pruning core); ranked_or/ranked_and are the
     exhaustive DataFrame plans."""
     wand = "wand"
     block_max_wand = "block_max_wand"
@@ -74,6 +74,13 @@ class PisaQueryAlgorithm(Enum):
     ranked_and = "ranked_and"
     ranked_or = "ranked_or"
     batch = "batch"
+
+
+# query_algorithm names and what runs them: the CLI and SparkRetriever
+# dispatch from these two tuples
+PRUNED_ALGORITHMS = ("block_max_wand", "block_max_maxscore", "maxscore", "wand",
+                     "batch")
+EXHAUSTIVE_ALGORITHMS = ("ranked_or", "ranked_and")
 
 
 class PisaStopwords(Enum):
@@ -153,9 +160,9 @@ def _as_query_list(queries) -> tuple[bool, list]:
             raise ValueError(
                 f"queries frame exceeds {MAX_DRIVER_QUERIES} rows — the "
                 "retriever parses queries driver-side (reference contract: "
-                "pandas-sized query sets). For corpus-sized query workloads "
-                "split into batches, or use query_algorithm='batch' "
-                "(operators.wand.retrieve_blockmax_batch) over chunks.")
+                "pandas-sized query sets), whatever its query_algorithm. "
+                f"Split the queries into batches of at most {MAX_DRIVER_QUERIES} "
+                "rows and transform each.")
         if cols[1] == "query_toks":
             return True, [(r["qid"], dict(r["query_toks"])) for r in rows]
         return False, [(r["qid"], r["query"]) for r in rows]
@@ -254,22 +261,14 @@ class SparkRetriever:
         pidx = self.index._persisted()
         qkw = ({"queries_toks": qs, "toks_scale": self.toks_scale}
                if pretok else {})
-        if self.query_algorithm in ("block_max_wand", "block_max_maxscore",
-                                    "maxscore", "wand"):
+        if self.query_algorithm in PRUNED_ALGORITHMS:
             from ..operators.wand import retrieve_blockmax
 
             return retrieve_blockmax(pidx, None if pretok else qs,
                                      k=self.num_results, scorer=self.scorer,
                                      stopwords=self.stops,
                                      **qkw, **self.scorer_params)
-        if self.query_algorithm == "batch":
-            from ..operators.wand import retrieve_blockmax_batch
-
-            return retrieve_blockmax_batch(pidx, None if pretok else qs,
-                                           k=self.num_results, scorer=self.scorer,
-                                           stopwords=self.stops,
-                                           **qkw, **self.scorer_params)
-        if self.query_algorithm in ("ranked_or", "ranked_and"):
+        if self.query_algorithm in EXHAUSTIVE_ALGORITHMS:
             from ..plans.pipeline import retrieve, retrieve_toks
 
             if pretok:

@@ -167,7 +167,7 @@ _PERSISTED: dict[str, object] = {}
 
 def _persisted(spark: SparkSession, sf_dir: str, encoding: str = "varint"):
     """One shared persisted block index per (sf_dir, encoding) (built into a
-    tempdir): every entry exercising the pruned/batch kernels reuses it
+    tempdir): every entry exercising the pruned kernel reuses it
     instead of re-inverting the corpus."""
     import tempfile
 
@@ -188,8 +188,8 @@ def _persisted(spark: SparkSession, sf_dir: str, encoding: str = "varint"):
 
 
 def _blockmax_batch_topk(spark: SparkSession, sf_dir: str, scorer: str) -> DataFrame:
-    """Scorer-generic SCALE path: persisted block index + the batch
-    dense-accumulator kernel (scorer-keyed term stats) — must match the same
+    """Scorer-generic SCALE path: persisted block index + the pruned kernel
+    under its batch name (scorer-keyed term stats) — must match the same
     DuckDB oracle as the exhaustive Column plan (variants-matrix contract,
     reference ``tests/test_variants.py:7-28``)."""
     from ..operators.wand import retrieve_blockmax_batch
@@ -286,7 +286,7 @@ def q_bm25_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The in-process serving engine (LocalSearcher dense mode) under the
     DuckDB oracle: collect the block index to the driver, answer with zero
     Spark jobs, re-wrap the pandas result as a DataFrame — must reproduce the
-    SAME oracle rows as the exhaustive plan and the Spark kernels."""
+    SAME oracle rows as the exhaustive plan and the Spark kernel."""
     from ..operators.serve import LocalSearcher
 
     idx = _persisted(spark, sf_dir)
@@ -317,7 +317,7 @@ def q_bm25_impact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """precompute_impact (reference B9, ``__init__.py:223,449``): BM25
     partials linearly quantized to 8-bit impacts folded INTO the index;
     retrieval is the integer dot product (quantized scorer) through the
-    batch kernel. Integer-exact vs the DuckDB oracle implementing the same
+    pruned kernel. Integer-exact vs the DuckDB oracle implementing the same
     quantization arithmetic."""
     import tempfile
 
@@ -342,7 +342,7 @@ def q_bm25_impact_topk_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-4 int32 serving fast path under the DuckDB oracle: the SAME
     quantized impact index answered by LocalSearcher's integer dense
     accumulate (exact integer sums, positional tie-trim) must reproduce the
-    SAME oracle rows as the Spark quantized batch kernel."""
+    SAME oracle rows as the Spark quantized kernel."""
     from ..operators.serve import LocalSearcher
 
     if sf_dir not in _QUANTIZED:
@@ -534,7 +534,7 @@ ORACLES["qld_topk"] = _scored_topk_sql(
     "ln(1.0 + t.tf * s.total_doclen / (1000.0 * l.cf)) + ln(1000.0 / (d.doclen + 1000.0))"
 )
 
-# the pruned/batch kernels must match the SAME oracles as the exhaustive
+# the pruned kernel must match the SAME oracles as the exhaustive
 # plans (rank/score identity across retrieval algorithms)
 ORACLES["dph_topk_blockmax"] = ORACLES["dph_topk"]
 ORACLES["pl2_topk_blockmax"] = ORACLES["pl2_topk"]

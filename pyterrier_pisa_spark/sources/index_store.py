@@ -403,7 +403,7 @@ def build_index(
                 os.path.join(path, "term_stats"))
         _commit_phase(path, "maxscore", {"sec": time.time() - t1})
 
-    # task-group count for the retrieval kernels: derived from INDEX SIZE at
+    # task-group count for the retrieval kernel: derived from INDEX SIZE at
     # build time (not cluster size) so the query-phase work plan is invariant
     # across cluster sizes (scaling comparability), while parallelism grows
     # with data: one group per docid chunk up to 4096 (beyond that, local
@@ -507,7 +507,7 @@ def make_block_packer(block_size: int, blocks_per_chunk: int,
         rest(tf, dl) = (k1+1)*tf / (tf + k1*(1-b + b*dl/avgdl))
     (meta block_max_kind='bm25_rest'); the true BM25 block bound is
     idf(df) * rest, reconstructed at query time (idf is per-term, known to
-    the kernels from the lexicon join)."""
+    the kernel from the lexicon join)."""
 
     def _groups_to_blocks(batches):
         """No carry/streaming logic needed: every group is complete in its
@@ -560,9 +560,9 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
     but buys: (a) no global-position bookkeeping — no prefix-sum window, no
     broadcast join, no cross-partition partial-block merge; (b) trivially
     deterministic output under any parallelism; (c) every block lies entirely
-    inside one docid chunk, so a batch query mode can partition the index by
+    inside one docid chunk, so the retrieval kernel can partition the index by
     chunk and accumulate each docid's score exactly once per task
-    (``wand.retrieve_blockmax_batch``).
+    (``wand.retrieve_blockmax``).
 
     block_id = chunk * (chunk_span//block_size + 1) + seq-within-chunk —
     strictly increasing with docid per term.
@@ -588,7 +588,7 @@ def _build_postings(spark, path, tf, lexicon, stats, block_size, k1, b, chunk_sp
     #   - the row is as narrow as possible first — (term_id, docid, tfdl)
     #     where tfdl packs tf<<32|doclen into ONE long; df is NOT carried
     #     (the stored block max is the df-independent "rest" factor, idf is
-    #     applied at query time from the lexicon the kernels join anyway)
+    #     applied at query time from the lexicon the kernel joins anyway)
     #   - collect_list's partial aggregation collapses each map partition's
     #     postings into one array row per (term_id, chunk) BEFORE the
     #     exchange — an order of magnitude fewer shuffle rows carrying the
@@ -825,7 +825,12 @@ def ensure_term_stats(index: "PersistedIndex", scorer: str, k1: float = 0.9,
     per-term min/max), cached as ``term_stats_<key>/`` parquet beside the
     index so subsequent queries on the same scorer are pure reads. The pass
     is embarrassingly parallel over block rows (no shuffle before the
-    term-level agg)."""
+    term-level agg).
+
+    Only a pristine index (opened by ``load_index``) reads or writes the
+    cache: a derived view (say a docid-range shard) has its own blocks, so
+    its stats are computed uncached — sound for its own blocks, and never
+    stored where the whole index would read them as its bounds."""
     spark = index.docmap.sparkSession
     meta = index.meta
     built = meta["scorer"].get("name", "bm25")
@@ -845,7 +850,7 @@ def ensure_term_stats(index: "PersistedIndex", scorer: str, k1: float = 0.9,
         df = spark.read.parquet(cache_dir)
         return df if "min_score" in df.columns else None  # pre-min cache
 
-    if os.path.exists(cache_dir):
+    if index.pristine and os.path.exists(cache_dir):
         cached = _read_cache()
         if cached is not None:
             return cached
@@ -875,6 +880,8 @@ def ensure_term_stats(index: "PersistedIndex", scorer: str, k1: float = 0.9,
                                   schema="term_id long, bmax double, bmin double")
     ts = per_block.groupBy("term_id").agg(F.max("bmax").alias("max_score"),
                                           F.min("bmin").alias("min_score"))
+    if not index.pristine:
+        return ts
     ts.write.mode("overwrite").parquet(cache_dir)
     return spark.read.parquet(cache_dir)
 
@@ -983,7 +990,7 @@ class PersistedIndex:
     def flat_tf(self, blocks: DataFrame | None = None) -> DataFrame:
         """Decode blocks (all of them by default) back to (term_id, docid,
         tf, doclen) in the JVM — the oracle view (also backs the reference's
-        ``get_corpus_iter``, S5). It shares no decoder with the kernels it
+        ``get_corpus_iter``, S5). It shares no decoder with the kernel it
         checks."""
         return C.flat_postings(self.blocks if blocks is None else blocks)
 

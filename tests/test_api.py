@@ -239,3 +239,18 @@ def test_fuse_rank_cutoff_and_reset(spark, api_idx):
     res2 = fused.search("chemical reactions").toPandas()
     assert res.equals(res2)
     assert "SparkRetriever" in repr(fused) and "PisaSparkIndex" in repr(api_idx)
+
+
+def test_cli_parses_every_query_algorithm():
+    """The CLI's ``--algorithm`` choices and SparkRetriever's dispatch come
+    from the same tuples: every ``PisaQueryAlgorithm`` value parses."""
+    from pyterrier_pisa_spark import PisaQueryAlgorithm
+    from pyterrier_pisa_spark.cli import parser
+    from pyterrier_pisa_spark.plans.api import (EXHAUSTIVE_ALGORITHMS,
+                                                PRUNED_ALGORITHMS)
+
+    for alg in PisaQueryAlgorithm:
+        args = parser().parse_args(["retrieve", "idx", "--queries", "q.tsv",
+                                    "--algorithm", alg.value])
+        assert args.algorithm == alg.value
+        assert alg.value in PRUNED_ALGORITHMS + EXHAUSTIVE_ALGORITHMS

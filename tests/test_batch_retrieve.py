@@ -1,10 +1,11 @@
-"""Batch (docid-partitioned) retrieval mode: must be rank/score-identical to
-both the per-query kernel and the exhaustive plan."""
+"""Batch retrieval mode (``retrieve_blockmax_batch``, the same kernel as
+``retrieve_blockmax``) over a many-chunk index: rank/score-identical to the
+exhaustive plan."""
 
 import numpy as np
 import pytest
 
-from pyterrier_pisa_spark.operators.wand import retrieve_blockmax, retrieve_blockmax_batch
+from pyterrier_pisa_spark.operators.wand import retrieve_blockmax_batch
 from pyterrier_pisa_spark.plans.pipeline import retrieve
 from pyterrier_pisa_spark.sources.corpus import synth_code_corpus
 from pyterrier_pisa_spark.sources.index_store import build_index, load_index
@@ -35,12 +36,6 @@ def _cmp(a, b):
     assert a["docid"].tolist() == b["docid"].tolist()
     assert (a["rank"] == b["rank"]).all()
     np.testing.assert_allclose(a["score"], b["score"], rtol=1e-5)
-
-
-def test_batch_matches_per_query(spark, idx):
-    per_q = retrieve_blockmax(idx, QUERIES, k=25, include_query=False).toPandas()
-    batch = retrieve_blockmax_batch(idx, QUERIES, k=25, include_query=False).toPandas()
-    _cmp(per_q, batch)
 
 
 def test_batch_matches_exhaustive(spark, idx):

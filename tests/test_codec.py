@@ -42,8 +42,7 @@ def test_delta_roundtrip(docids, block):
        st.integers(min_value=1, max_value=128))
 @settings(max_examples=100, deadline=None)
 def test_block_roundtrip(postings, block):
-    """Postings -> Arrow block rows -> postings, through both flatteners
-    (Arrow for construction paths, pandas cells for the kernels)."""
+    """Postings -> Arrow block rows -> postings."""
     postings.sort()
     d, t, dl = (np.array(c, dtype=np.int64) for c in zip(*postings))
     batch = _blocks(d, t, dl, block)
@@ -53,10 +52,6 @@ def test_block_roundtrip(postings, block):
     got = C.decode_arrow(batch)
     for a, b in zip(got[:3], (d, t, dl)):
         np.testing.assert_array_equal(a, b)
-    fd, ft, fdl = C.decode_frame(batch.to_pandas())
-    np.testing.assert_array_equal(fd, d)
-    np.testing.assert_array_equal(ft, t.astype(np.float64))
-    np.testing.assert_array_equal(fdl, dl.astype(np.float64))
 
 
 def test_codec_registry():

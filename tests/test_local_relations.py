@@ -88,6 +88,43 @@ def test_query_plans_have_no_rdd_relation(spark, one_chunk):
     assert len(plans[0].toPandas()) > 0
 
 
+def _below_kernel_exchange(plan: str) -> list[str]:
+    """The lines of the subtree under the kernel's exchange (the explicit
+    repartition on task_group) in an executed-plan tree string."""
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines)
+               if re.search(r"Exchange hashpartitioning\(task_group#", ln))
+    col = re.search(r"[A-Za-z]", lines[top]).start()
+    below = []
+    for ln in lines[top + 1:]:
+        m = re.search(r"[A-Za-z]", ln)
+        if m is None or m.start() <= col:
+            break
+        below.append(ln)
+    return below
+
+
+@pytest.mark.parametrize("fn", [retrieve_blockmax, retrieve_blockmax_batch])
+@pytest.mark.parametrize("which", ["one_chunk", "multi_chunk"])
+def test_one_kernel_plan_shape(spark, request, fn, which):
+    """Both names plan one Arrow kernel stage over blocks partitioned by task
+    group (plus a query group on the one-chunk index, where the shuffle is
+    wider than the chunk count): no pandas kernel, no join to tag blocks with
+    their query groups, and no per-query copy of a block below the
+    exchange."""
+    idx = request.getfixturevalue(which)
+    if which == "multi_chunk":
+        idx = idx[0]
+    plan = fn(idx, QUERIES, k=10)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert not re.search(r"Join .*qgrp#", plan), plan
+    below = _below_kernel_exchange(plan)
+    assert below and not any(re.search(r"\bqid#", ln) for ln in below), plan
+    if which == "one_chunk":
+        assert "qgrp#" in "".join(below), plan
+
+
 def test_local_relation_rows_and_pandas(spark):
     rows = [("a", 1, 0.5), ("b", None, 2.0)]
     schema = "qid string, n long, w double"

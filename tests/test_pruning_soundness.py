@@ -22,31 +22,32 @@ end-to-end (advice repro: exhaustive top-1 doc 9 @ 5.0-ish vs pruned
 returning a stale leader with an inflated score)."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
-from pyterrier_pisa_spark.operators.codec import decode_frame
-from pyterrier_pisa_spark.operators.wand import _taat_score
+from pyterrier_pisa_spark.operators.wand import TaskBlocks, _taat_score
 
 
 def _block(block_id, docids, tfs, bmax):
     """One block row in the postings layout; float tfs carry the partials."""
-    docids = np.asarray(docids, dtype=np.int64)
+    docids = [int(d) for d in docids]
     return {
         "block_id": block_id,
         "count": len(docids),
-        "docid_first": int(docids[0]),
-        "docid_last": int(docids[-1]),
+        "docid_first": docids[0],
+        "docid_last": docids[-1],
         "block_max_score": float(bmax),
-        "docids_delta": docids - docids[0],
-        "tfs": np.asarray(tfs, dtype=np.float64),
-        "doclens": np.zeros(len(docids), dtype=np.float64),
+        "docids_delta": [d - docids[0] for d in docids],
+        "tfs": [float(t) for t in tfs],
+        "doclens": [0.0] * len(docids),
     }
 
 
 def _run(terms, by_term, k=1, use_block_max=True):
+    """``by_term``: term_id -> block rows, flattened by the kernel's helper."""
+    rows = [{"term_id": tid, **b} for tid, blocks in by_term.items() for b in blocks]
     partial = lambda tf, dl, st: tf - 10.0  # partial encoded as tf-10  # noqa: E731
-    return _taat_score(terms, by_term, partial, decode_frame, k,
+    return _taat_score(terms, TaskBlocks(pa.Table.from_pylist(rows)), partial, k,
                        conjunctive=False, use_block_max=use_block_max)
 
 
@@ -65,10 +66,8 @@ def test_negative_partials_block_skip_is_sound():
     # term 1: doc1 -> +2.0, doc9 -> +1.5 (encoded as tf-10)
     # term 2: doc1 -> -1.9, doc9 -> -0.1
     by_term = {
-        1: pd.DataFrame([_block(0, [1], [12.0], 2.0),
-                         _block(1, [9], [11.5], 1.5)]),
-        2: pd.DataFrame([_block(0, [1], [8.1], -1.9),
-                         _block(1, [9], [9.9], -0.1)]),
+        1: [_block(0, [1], [12.0], 2.0), _block(1, [9], [11.5], 1.5)],
+        2: [_block(0, [1], [8.1], -1.9), _block(1, [9], [9.9], -0.1)],
     }
     terms = _terms([(1, 1.0, 2.0, 1.5), (2, 1.0, -0.1, -1.9)])
     acc_d, acc_s = _run(terms, by_term, k=1)
@@ -87,43 +86,15 @@ def test_nonnegative_scorer_still_prunes():
     the classic one: blocks provably below theta are still skipped (we can't
     observe the skip directly, but results stay exact)."""
     by_term = {
-        1: pd.DataFrame([_block(0, [1, 2], [15.0, 14.0], 5.0),
-                         _block(1, [8, 9], [11.0, 10.5], 1.0)]),
-        2: pd.DataFrame([_block(0, [2], [13.0], 3.0)]),
+        1: [_block(0, [1, 2], [15.0, 14.0], 5.0),
+            _block(1, [8, 9], [11.0, 10.5], 1.0)],
+        2: [_block(0, [2], [13.0], 3.0)],
     }
     terms = _terms([(1, 1.0, 5.0, 0.5), (2, 1.0, 3.0, 3.0)])
     acc_d, acc_s = _run(terms, by_term, k=1)
     got = {int(d): float(s) for d, s in zip(acc_d, acc_s)}
     top = max(got.items(), key=lambda kv: kv[1])
     assert top == (2, pytest.approx(4.0 + 3.0))
-
-
-def test_batch_kernel_partial_trailing_term_block():
-    """make_batch_kernel must clamp the LAST term-row block: when the dense
-    budget makes t_block < n_terms with a remainder, Qw[:, t0:t1] clips to
-    the matrix edge while M used to stay t_block rows -> matmul ValueError.
-    dense_cells=1 forces t_block=1 over 3 terms (remainder path exercised
-    for every block)."""
-    from pyterrier_pisa_spark.operators.wand import make_batch_kernel
-
-    qinfo = {"q1": [(1, 1.0, 0.0, 3.0, 1.0, 0.0),
-                    (2, 1.0, 0.0, 2.0, 1.0, 0.0),
-                    (3, 1.0, 0.0, 1.0, 1.0, 0.0)]}
-    partial = lambda tf, dl, st: tf  # noqa: E731
-    kernel = make_batch_kernel(qinfo, partial, k=10, chunk_span=100,
-                               dense_cells=1)
-    rows = []
-    for tid, docids, tfs in [(1, [1, 2], [1.0, 2.0]),
-                             (2, [2, 3], [4.0, 8.0]),
-                             (3, [1, 3], [16.0, 32.0])]:
-        b = _block(0, docids, tfs, max(tfs))
-        b["term_id"] = tid
-        b["chunk"] = 0
-        rows.append(b)
-    out = kernel(pd.DataFrame(rows))
-    got = dict(zip(out["docid"].astype(int), out["score"]))
-    assert got == {1: pytest.approx(17.0), 2: pytest.approx(6.0),
-                   3: pytest.approx(40.0)}
 
 
 def test_empty_match_result_schema(spark, tmp_path):

@@ -111,7 +111,8 @@ def test_api_sugar(spark, serve_idx, tmp_path_factory):
 def test_sharded_matches_unsharded(spark, tmp_path_factory, scorer, mode):
     """Docid-range sharding is exact: per-shard top-ks merged under the same
     float32-granularity order reproduce the unsharded searcher row for row
-    (chunk-aligned boundaries; global term stats shared)."""
+    (chunk-aligned boundaries; global collection statistics shared, term
+    maxima per shard)."""
     from pyterrier_pisa_spark.operators.serve import ShardedLocalSearcher
     from pyterrier_pisa_spark.sources.corpus import synth_code_corpus
 
@@ -127,6 +128,45 @@ def test_sharded_matches_unsharded(spark, tmp_path_factory, scorer, mode):
     a = single.search(QUERIES, k=30).sort_values(["qid", "rank"], ignore_index=True)
     b = fleet.search(QUERIES, k=30).sort_values(["qid", "rank"], ignore_index=True)
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_shard_views_leave_term_stats_cache_sound(spark, tmp_path):
+    """A shard is a derived view with its own blocks: its term maxima are
+    computed uncached, so the index's scorer-keyed cache never holds a
+    shard-local maximum below the global one (every later pruned query on
+    the index would skip blocks with it). ``b=0.0`` is a falsy parameter and
+    a key of its own."""
+    import pyarrow.dataset as pads
+
+    from pyterrier_pisa_spark.operators import codec as C
+    from pyterrier_pisa_spark.operators import score as S
+    from pyterrier_pisa_spark.operators.serve import ShardedLocalSearcher
+    from pyterrier_pisa_spark.sources.index_store import ensure_term_stats
+
+    path = str(tmp_path / "idx")
+    build_index(synth_code_corpus(spark, num_docs=400, seed=7), path,
+                stemmer="porter2", chunk_span=128, mode="overwrite")
+    idx = load_index(spark, path)
+    k1 = idx.meta["scorer"]["k1"]
+    fleet = ShardedLocalSearcher(idx, n_shards=2, b=0.0, mode="blockmax")
+    assert len(fleet.shards) == 2
+    # the maxima every later query on the whole index reads (the cache, if
+    # anything wrote it)
+    cached = ensure_term_stats(idx, "bm25", k1=k1, b=0.0).toPandas()
+    # the global maxima, recomputed from the postings
+    blk = pads.dataset(f"{path}/postings").to_table()
+    _d, tf, dl, counts = C.decode_arrow(blk)
+    tid = np.repeat(blk.column("term_id").to_numpy(), counts)
+    lex = idx.lexicon.select("term_id", "df").toPandas()
+    df_of = np.zeros(int(lex["term_id"].max()) + 1)
+    df_of[lex["term_id"].to_numpy()] = lex["df"].to_numpy()
+    partial = S.np_partial_fn("bm25", idx.stats, k1, 0.0)
+    p = partial(tf.astype(np.float64), dl.astype(np.float64), df_of[tid])
+    gmax = pd.Series(p).groupby(tid).max()
+    got = cached.set_index("term_id")["max_score"].reindex(gmax.index)
+    assert (got.to_numpy() >= gmax.to_numpy()).all(), \
+        int((got.to_numpy() < gmax.to_numpy()).sum())
+
 
 def test_quantized_int_fast_path_identical(spark, serve_idx, tmp_path_factory):
     """The int32 accumulate on quantized indexes must engage AND remain

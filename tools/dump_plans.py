@@ -41,8 +41,7 @@ def main() -> None:
     from pyterrier_pisa_spark.operators import retrieve as R
     from pyterrier_pisa_spark.operators.dedup import minhash_dedup
     from pyterrier_pisa_spark.operators.similarity import lsh_cosine_topk
-    from pyterrier_pisa_spark.operators.wand import (retrieve_blockmax,
-                                                     retrieve_blockmax_batch)
+    from pyterrier_pisa_spark.operators.wand import retrieve_blockmax
     from pyterrier_pisa_spark.plans.entry_queries import QUERIES, _index
     from pyterrier_pisa_spark.sources.corpus import synth_code_corpus
     from pyterrier_pisa_spark.sources.index_store import build_index, load_index
@@ -73,23 +72,18 @@ def main() -> None:
     pidx = load_index(spark, f"{tmp}/idx")
     pq = [("p1", "parse index query"), ("p2", "def return")]
 
-    # 2. batch kernel
+    # 2. the pruned kernel (retrieve_blockmax and retrieve_blockmax_batch
+    # are one function, so one plan)
     sections.append((
-        "Batch retrieval kernel (docid-partitioned, vectorized TAAT)",
+        "Pruned retrieval kernel (docid-chunk tasks, block-max TAAT)",
         "ONE scan of the postings parquet with the term_id filter PUSHED to "
         "the scan (row-group min/max pruning on (term_id, block_id)-sorted "
-        "row groups); one explicit repartition by task_group feeding "
-        "applyInPandas (pinned task count, independent of AQE); global top-k "
-        "window after per-task local top-ks.",
-        _fmt(retrieve_blockmax_batch(pidx, pq, k=10, include_query=False))))
-
-    # 3. per-query kernel
-    sections.append((
-        "Per-query pruned kernel ((qid, task_group) fan-out)",
-        "Candidate blocks join the broadcast (term_id, qid) table, then "
-        "partition by (qid, task_group): a hot query's postings spread over "
-        "many tasks; each task runs block-max/max-score pruned TAAT and "
-        "emits a local top-k.",
+        "row groups); one explicit repartition by task_group (plus qgrp, "
+        "from a literal term->groups map, when the index has fewer chunks "
+        "than shuffle partitions) feeding applyInArrow (pinned task count, "
+        "independent of AQE); each task runs block-max/max-score pruned TAAT "
+        "for every query of its subset; global top-k window after per-task "
+        "local top-ks.",
         _fmt(retrieve_blockmax(pidx, pq, k=10, include_query=False))))
 
     # 3b. the invert (build's only posting-granularity shuffle)
