@@ -49,8 +49,8 @@ from . import score as S
 from .retrieve import (DEFAULT_NUM_RESULTS, QTERMS_SCHEMA, QUERIES_SCHEMA,
                        local_relation)
 
-# the postings columns the kernel reads; block order within a term does not
-# change any result (``_merge_acc`` sums per docid), so no block_id
+# the postings columns the kernel reads (``TaskBlocks`` orders a term's
+# blocks by docid_first, so no block_id)
 KERNEL_COLS = ("term_id", "count", "docid_first", "docid_last",
                "block_max_score", *C.LIST_COLUMNS)
 
@@ -71,20 +71,25 @@ def _merge_acc(acc_d, acc_s, new_d, new_s):
 
 class TaskBlocks:
     """Postings blocks flattened once, for ``_taat_score``: per-block arrays
-    grouped by term_id, so a term's blocks are one contiguous slice, and the
-    postings concatenated in input order, so a block's postings are one
-    segment. The kernel builds one per task; ``LocalSearcher
+    sorted by (term_id, docid_first), so a term's blocks are one contiguous
+    slice in docid order, and the postings concatenated in input order, so a
+    block's postings are one segment. A term's blocks arrive in any order (its
+    chunks hash to different build and shuffle partitions), but the TAAT
+    accumulator and ``_topk_select`` need ascending docids: a term's blocks
+    cover disjoint docid ranges, so decoding them in docid_first order yields
+    sorted docids. The kernel builds one per task; ``LocalSearcher
     (mode='blockmax')`` builds one over the whole index."""
 
     def __init__(self, blocks):
         """``blocks``: an Arrow table or batch in the postings layout."""
         d, tf, dl, counts = C.decode_arrow(blocks)
         tid = blocks.column("term_id").to_numpy()
-        order = np.argsort(tid, kind="stable")
+        first = blocks.column("docid_first").to_numpy()
+        order = np.lexsort((first, tid))
         self.term_id = tid[order]
         self.count = counts[order]
         self.start = C.segment_starts(counts)[order]
-        self.first = blocks.column("docid_first").to_numpy()[order]
+        self.first = first[order]
         self.last = blocks.column("docid_last").to_numpy()[order]
         self.bmax = blocks.column("block_max_score").to_numpy()[order]
         self.postings = (d, tf.astype(np.float64), dl.astype(np.float64))
@@ -112,7 +117,8 @@ def _topk_select(docids: np.ndarray, scores: np.ndarray,
     exactly, so integer order IS the engine-wide float32-granularity order.
 
     Candidates MUST arrive in ascending docid order (the dense engine's
-    ``flatnonzero`` and the TAAT merge both guarantee it) — boundary ties
+    ``flatnonzero`` and the TAAT accumulator — ``TaskBlocks`` docid order,
+    then ``_merge_acc`` — both guarantee it) — boundary ties
     then resolve by taking the FIRST ``k - above`` tied positions (smallest
     docids), so the final lexsort runs over exactly k rows, never over the
     (potentially huge — coarse integer scores) tie group."""

@@ -97,6 +97,40 @@ def test_nonnegative_scorer_still_prunes():
     assert top == (2, pytest.approx(4.0 + 3.0))
 
 
+@pytest.mark.parametrize("spec", [
+    [(1, 1.0, 5.0, 5.0)],
+    [(1, 1.0, 5.0, 5.0), (2, 1.0, 1.0, 1.0)],
+])
+def test_block_input_order_does_not_change_results(spec):
+    """A term's blocks reach a task in any order (its docid chunks hash to
+    different partitions). Term 1 spans three chunks of float32-tied scores
+    (5.0 and 5.0 + 1e-9); term 2 lifts doc 203 by 1.0 from a block that only
+    the accumulator maximum over docs 200..203 keeps from being skipped at
+    k=2. Forward and reversed row order must give the same top-k: the
+    smallest tied docids at the boundary, and doc 203 first when term 2
+    counts."""
+    from pyterrier_pisa_spark.operators.wand import _topk_select
+
+    def chunk(block_id, first):
+        docs = range(first, first + 4)
+        return _block(block_id, docs, [15.0, 15.0 + 1e-9, 15.0, 15.0 + 1e-9], 5.0)
+
+    by_term = {1: [chunk(0, 0), chunk(1, 100), chunk(2, 200)],
+               2: [_block(0, [203], [11.0], 1.0)]}
+    terms = _terms(spec)
+    rows = [{"term_id": tid, **b} for tid, blocks in by_term.items() for b in blocks]
+    partial = lambda tf, dl, st: tf - 10.0  # noqa: E731
+    got = []
+    for order in (rows, rows[::-1]):
+        blocks = TaskBlocks(pa.Table.from_pylist(order))
+        acc_d, acc_s = _taat_score(terms, blocks, partial, 2,
+                                   conjunctive=False, use_block_max=True)
+        d, s = _topk_select(acc_d, acc_s, 2)
+        got.append((d.tolist(), s.tolist()))
+    assert got[0] == got[1]
+    assert got[0][0] == ([203, 0] if len(spec) == 2 else [0, 1])
+
+
 def test_empty_match_result_schema(spark, tmp_path):
     """No query term in the lexicon: the empty result must carry the same
     schema as a non-empty one for the same flags (query column present when
